@@ -70,30 +70,3 @@ def train_als_recommend(
         user_col, F.posexplode("recommendations").alias("pos", "rec")
     ).select(user_col, F.col("rec." + item_col).alias(item_col), "pos")
     return ALSResult(model=model, recommendations=exploded)
-
-
-def grid_search_als(
-    train: DataFrame,
-    val_labels: DataFrame,
-    ranks: list[int],
-    reg_params: list[float],
-    k: int = 100,
-    metric: str = "ndcg_at_k",
-    **als_kwargs,
-) -> tuple[dict, list[dict]]:
-    """Grid search à la als_recommendation.py:47-72: train per (rank, reg),
-    score NDCG@k on validation labels, return (best, all results)."""
-    from bigdata_capstone_spark.operators.ranking_metrics import ranking_metrics
-
-    results = []
-    for r in ranks:
-        for reg in reg_params:
-            res = train_als_recommend(train, k=k, rank=r, reg_param=reg, **als_kwargs)
-            row = ranking_metrics(
-                res.recommendations, val_labels, k,
-                user_col=als_kwargs.get("user_col", "userId"),
-                item_col=als_kwargs.get("item_col", "movieId"),
-            ).collect()[0]
-            results.append({"rank": r, "regParam": reg, **row.asDict()})
-    best = max(results, key=lambda d: d[metric])
-    return best, results

@@ -484,6 +484,25 @@ def cms_join_size_estimate(
 # (lvl, count) contingency; the state is ≤`capacity` rows however many
 # values stream through; merge = union + one recompact over state-sized
 # frames, O(batch) for streaming ingest.
+#
+# WEIGHTED rung (r8 verdict Missing #5): corpus dashboards want
+# TOKEN-weighted value distributions (a 10-token doc and a 10k-token doc
+# must not count equally); the unweighted sketch samples items
+# uniformly. The per-item PRF coin becomes a 60-bit uniform u, and the
+# item survives threshold t iff u < w * 2^(60-t) — inclusion probability
+# min(1, w/2^t), evaluated with pure integer shifts ((u >> (60-t)) < w,
+# no overflow, identical in any engine). A kept item carries the
+# Horvitz-Thompson weight est_w = max(w, 2^thr) — integer-exact.
+#
+# Both families run on ONE core (the ``_q*`` functions below). The
+# threshold rule, canonical-state property, merge group law and floor
+# clamp are identical between them — the weighted level is still a pure
+# per-item PRF — so the families differ only in the level column and in
+# whether a ``w`` column rides along. A global sketch is the grouped
+# case with ``group_cols=[]``: its windows run under
+# relational.constant_scope's cache barrier instead of a real group key.
+# The public ``qsketch_*`` / ``wqsketch_*`` names fix the family and
+# call into the core.
 # ---------------------------------------------------------------------------
 
 QSKETCH_MAX_LVL = 40
@@ -514,148 +533,377 @@ def qsketch_lvl_sql(hash_col: str = "__h") -> str:
     return f"({terms})::INT"
 
 
-def qsketch_items(df: DataFrame, key_col: Column, value_col: Column) -> DataFrame:
-    """(qs_id, value, lvl) item rows — the sketch's raw input. ``key_col``
-    must be unique per row (the PRF coin is per-item; duplicate keys
-    would correlate their coins and bias the sample)."""
-    return df.select(
+def wqsketch_wlvl_col(key_col: Column, w_col: Column) -> Column:
+    """Weighted compaction level: the largest threshold the item's
+    60-bit PRF draw survives, wlvl = #{t in 1..40 : (u >> (60-t)) < w}
+    — survival is monotone decreasing in t, so the count IS the max
+    surviving level. Items with w <= 0 must be filtered by the caller
+    (they survive nothing)."""
+    u = md5_long(F.concat(F.lit("wqs:"), key_col.cast("string")))
+    w = w_col.cast("long")
+    lvl = F.lit(0)
+    for t in range(1, QSKETCH_MAX_LVL + 1):
+        lvl = lvl + F.when(F.shiftright(u, 60 - t) < w, 1).otherwise(0)
+    return lvl.cast("int")
+
+
+def wqsketch_wlvl_sql(w_expr: str = "w", hash_col: str = "__h") -> str:
+    """DuckDB twin of :func:`wqsketch_wlvl_col` over a precomputed
+    60-bit hash column (materialize ``md5('wqs:' || key)`` once)."""
+    terms = " + ".join(
+        f"CASE WHEN ({hash_col} >> {60 - t}) < {w_expr} THEN 1 ELSE 0 END"
+        for t in range(1, QSKETCH_MAX_LVL + 1)
+    )
+    return f"({terms})::INT"
+
+
+# --- the core ---------------------------------------------------------------
+
+
+def _qitems(
+    df: DataFrame,
+    lead: list[str | Column],
+    key_col: Column,
+    value_col: Column,
+    weight_col: Column | None = None,
+) -> DataFrame:
+    """(lead..., qs_id, value[, w], lvl) item rows — the sketch's raw
+    input; ``lead`` is the group columns or the one-pass shard column.
+    Without ``weight_col`` the level is the unweighted PRF level; with
+    it, non-positive weights are dropped (a zero-weight item contributes
+    nothing to any weighted rank) and the level is the weighted one.
+    ``key_col`` must be unique per row (the PRF coin is per-item;
+    duplicate keys would correlate their coins and bias the sample)."""
+    cols = [
+        *lead,
         key_col.cast("string").alias("qs_id"),
         value_col.cast("double").alias("value"),
-    ).withColumn("lvl", qsketch_lvl_col(F.col("qs_id")))
+    ]
+    if weight_col is None:
+        return df.select(*cols).withColumn(
+            "lvl", qsketch_lvl_col(F.col("qs_id"))
+        )
+    return (
+        df.select(*cols, weight_col.cast("long").alias("w"))
+        .filter(F.col("w") > 0)
+        .withColumn("lvl", wqsketch_wlvl_col(F.col("qs_id"), F.col("w")))
+    )
 
 
-def qsketch_compact(
-    items: DataFrame, capacity: int, floor: DataFrame | None = None
+def _carried(df: DataFrame, group_cols: list[str]) -> list[str]:
+    """The item columns a state carries between the group key and
+    (lvl, thr): (qs_id, value) or (qs_id, value, w)."""
+    skip = {*group_cols, "__shard", "lvl", "thr"}
+    return [c for c in df.columns if c not in skip]
+
+
+def _by_group(
+    df: DataFrame, small: DataFrame, group_cols: list[str]
 ) -> DataFrame:
-    """Canonical compaction: keep items with lvl >= thr, where thr is
-    the minimal INTEGER (not merely minimal present level — integer
-    minimality is what makes the merge law exact when one shard's items
-    all happen to sit high) such that the kept count <= capacity:
-    thr = max over levels L with count(lvl >= L) > capacity of (L+1),
-    or 0 when everything fits. Returns (qs_id, value, lvl, thr) with
-    thr constant across rows — the state carries its own threshold so a
-    merge can floor at max(thr_a, thr_b) before recompacting.
+    """Attach a per-group (or, for the global sketch, 1-row) frame to
+    ``df`` as a broadcast."""
+    if group_cols:
+        return df.join(F.broadcast(small), on=group_cols)
+    return df.crossJoin(F.broadcast(small))
 
-    ``floor`` (a 1-row (__floor) frame, used by :func:`qsketch_merge`)
-    marks that ``items`` were already filtered to lvl >= __floor: the
-    recomputed threshold is then max(__floor, minimal-over-items).
-    Without this clamp the merge law breaks EXACTLY when the carried
-    floor already equals the from-scratch threshold — the floored
-    survivors fit capacity, no level exceeds it, and the recompaction
-    would record thr = 0 while the from-scratch build records the
-    floor (the kept ROWS still matched, which is why small-split tests
-    passed; a 4-shard sequential fold caught the thr column drift).
 
-    The (lvl, count) contingency is <=41 rows; its cumulative count runs
-    under a constant scope key via the cache-barrier recipe
-    (relational.constant_scope) so no unpartitioned window ever touches
-    item rows."""
+def _qcompact(
+    items: DataFrame,
+    group_cols: list[str],
+    capacity: int,
+    floor: DataFrame | None = None,
+) -> DataFrame:
+    """Canonical compaction, per group: keep items with lvl >= thr, where
+    thr is the minimal INTEGER (not merely minimal present level —
+    integer minimality is what makes the merge law exact when one
+    shard's items all happen to sit high) such that the kept count <=
+    capacity: thr = max over levels L with count(lvl >= L) > capacity of
+    (L+1), or 0 when everything fits. Returns (group..., qs_id, value[,
+    w], lvl, thr) with thr constant within a group — the state carries
+    its own threshold so a merge can floor at max(thr_a, thr_b) before
+    recompacting. Weighted states keep their raw weight: the
+    Horvitz-Thompson est_w = max(w, 2^thr) is applied at QUERY time so
+    the state stays merge-closed (a merge may raise thr, which re-scales
+    est_w for ALL survivors).
+
+    ``floor`` (a per-group (group..., __floor) frame, used by
+    :func:`_qmerge`) marks that ``items`` were already filtered to lvl
+    >= __floor: the recomputed threshold is then max(__floor,
+    minimal-over-items). Without this clamp the merge law breaks EXACTLY
+    when the carried floor already equals the from-scratch threshold —
+    the floored survivors fit capacity, no level exceeds it, and the
+    recompaction would record thr = 0 while the from-scratch build
+    records the floor (the kept ROWS still matched, which is why
+    small-split tests passed; a 4-shard sequential fold caught the thr
+    column drift).
+
+    The (group..., lvl, count) contingency is <=41 rows per group. Its
+    cumulative count partitions by the REAL group columns; the global
+    sketch runs it under a constant scope key via the cache-barrier
+    recipe (relational.constant_scope) so no unpartitioned window ever
+    touches item rows."""
     from pyspark.sql.window import Window
 
     from bigdata_capstone_spark.operators.relational import constant_scope
 
-    per = constant_scope(
-        items.groupBy("lvl").agg(F.count(F.lit(1)).alias("cnt"))
+    per = items.groupBy(*group_cols, "lvl").agg(
+        F.count(F.lit(1)).alias("cnt")
     )
+    scope = group_cols or ["__s"]
+    if not group_cols:
+        per = constant_scope(per)
     w = (
-        Window.partitionBy("__s")
+        Window.partitionBy(*scope)
         .orderBy(F.desc("lvl"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = per.select("lvl", F.sum("cnt").over(w).alias("cum"))
-    cand = cum.agg(
-        F.coalesce(
-            F.max(F.when(F.col("cum") > capacity, F.col("lvl") + 1)),
-            F.lit(0),
-        )
-        .cast("int")
-        .alias("__cand")
-    )
-    if floor is not None:
-        thr = cand.crossJoin(F.broadcast(floor)).select(
-            F.greatest(F.col("__cand"), F.col("__floor"))
+    thr = (
+        per.select(*group_cols, "lvl", F.sum("cnt").over(w).alias("cum"))
+        .groupBy(*group_cols)
+        .agg(
+            F.coalesce(
+                F.max(F.when(F.col("cum") > capacity, F.col("lvl") + 1)),
+                F.lit(0),
+            )
             .cast("int")
             .alias("thr")
         )
-    else:
-        thr = cand.select(F.col("__cand").alias("thr"))
+    )
+    if floor is not None:
+        thr = _by_group(thr, floor, group_cols).select(
+            *group_cols,
+            F.greatest(F.col("thr"), F.col("__floor")).cast("int").alias("thr"),
+        )
     return (
-        items.crossJoin(F.broadcast(thr))
+        _by_group(items, thr, group_cols)
         .filter(F.col("lvl") >= F.col("thr"))
-        .select("qs_id", "value", "lvl", "thr")
+        .select(*group_cols, *_carried(items, group_cols), "lvl", "thr")
     )
 
 
-def qsketch_build(
-    df: DataFrame, key_col: Column, value_col: Column, capacity: int
+def _qmerge(
+    states: list[DataFrame], group_cols: list[str], capacity: int
 ) -> DataFrame:
-    """Batch build: items -> canonical compaction. The source is scanned
-    TWICE (threshold contingency, then the keep filter), both scans
-    column-pruned to (key, value) — the honest cost of a canonical
-    batch state; the streaming twin never rescans (each micro-batch
-    builds its own bounded partial and folds)."""
-    return qsketch_compact(qsketch_items(df, key_col, value_col), capacity)
+    """Merge per-group sketch states built over DISJOINT item sets:
+    union the state rows, floor each group at its max carried threshold
+    (a row another shard already compacted away must not resurrect —
+    dropping below-floor rows first is what keeps the recompacted
+    threshold identical to the from-scratch build's), then recompact
+    with the floor clamp. O(sum of state sizes); associative and
+    commutative, so shard trees and streaming folds land on the same
+    bits."""
+    u = states[0]
+    for s in states[1:]:
+        u = u.unionByName(s)
+    # cache the union: bounded by len(states) * |groups| * capacity rows
+    # BY DESIGN, and read twice here (floor aggregate + the floor filter)
+    # plus twice more inside the recompaction — without it every
+    # consumer re-executes each shard's full build lineage
+    u = u.cache()
+    floor = u.groupBy(*group_cols).agg(F.max("thr").alias("__floor"))
+    items = (
+        _by_group(u, floor, group_cols)
+        .filter(F.col("lvl") >= F.col("__floor"))
+        .select(*group_cols, *_carried(u, group_cols), "lvl")
+    )
+    merged = _qcompact(items, group_cols, capacity, floor=floor)
+    # materialize the bounded result eagerly, then RELEASE the union
+    # cache: via start_state_fold_maintenance this merge runs once per
+    # micro-batch, and an un-unpersisted cache per epoch accumulates
+    # without bound over a stream's lifetime (ADVICE r8). localCheckpoint
+    # also truncates the fold's lineage to the bounded state.
+    merged = merged.localCheckpoint(eager=True)
+    u.unpersist()
+    return merged
 
 
-def qsketch_partials_onepass(
-    df: DataFrame, key_col: Column, value_col: Column, capacity: int
-) -> DataFrame:
+def _qfold_partials(items: DataFrame, capacity: int) -> DataFrame:
     """Per-partition sketch partials in ONE corpus pass, ZERO shuffle:
     hashing and level assignment stay JVM-side (whole-stage codegen);
     an Arrow ``mapInPandas`` kernel then folds each partition's items
     into a bounded local state — ``state = compact(state ∪ batch)``
     per Arrow batch, so memory is O(capacity + batch) however large
-    the partition. Emits (qs_id, value, lvl, thr) partial states, one
-    per input partition, each a valid canonical state of its own item
-    subset (the incremental fold equals the partition's one-shot
-    compaction by the same floor-clamp argument as
-    :func:`qsketch_compact`: for t >= thr(A), counts over
+    the partition. Emits one state per input partition, each a valid
+    canonical state of its own item subset (the incremental fold equals
+    the partition's one-shot compaction by the same floor-clamp argument
+    as :func:`_qcompact`: for t >= thr(A), counts over
     state(A) ∪ B_{lvl>=thr(A)} equal counts over A ∪ B).
 
-    This is the scale answer to the batch build's two scans (r8
-    verdict Missing #2): the declarative build must scan once for the
-    threshold contingency and again for the keep filter, because the
-    threshold is a function of all items; the local fold sidesteps
-    that by keeping its running threshold in kernel memory."""
-    items = qsketch_items(df, key_col, value_col)
+    When ``items`` carries an int ``__shard`` column the kernel keeps one
+    fold state PER SHARD (r10 optimization): a shard-merge entry that
+    simulates S shards by filtering the same table S times pays S full
+    scans and S sequential eager materializations, while this pays one.
+    The rows with ``__shard == s`` form a valid canonical partial state
+    of shard s's item subset (each shard's fold never sees another
+    shard's items, so the exactness argument applies per shard), and a
+    downstream :func:`_qmerge` lands on the same bits as the
+    per-shard-scan build by the tested canonical-state merge law.
+
+    This is the scale answer to the declarative build's two scans (r8
+    verdict Missing #2): that build must scan once for the threshold
+    contingency and again for the keep filter, because the threshold is
+    a function of all items; the local fold sidesteps that by keeping
+    its running threshold in kernel memory."""
+    keyed = "__shard" in items.columns
+    cols = _carried(items, []) + ["lvl"]
+    # (pandas dtype, Spark type) of every column a fold state can carry
+    types = {
+        "qs_id": (object, "string"),
+        "value": ("float64", "double"),
+        "w": ("int64", "bigint"),
+        "lvl": ("int32", "int"),
+    }
+    dtypes = {c: types[c][0] for c in cols}
+    schema = ", ".join(
+        (["__shard int"] if keyed else [])
+        + [f"{c} {types[c][1]}" for c in cols]
+        + ["thr int"]
+    )
     cap = int(capacity)
 
     def fold(batches):
         import numpy as np
         import pandas as pd
 
-        cur = pd.DataFrame(
-            {
-                "qs_id": pd.Series(dtype=object),
-                "value": pd.Series(dtype="float64"),
-                "lvl": pd.Series(dtype="int32"),
-            }
-        )
-        thr = 0
+        empty = pd.DataFrame({c: pd.Series(dtype=t) for c, t in dtypes.items()})
+        states: dict[int, tuple[int, pd.DataFrame]] = {}
         for pdf in batches:
-            keep = pdf["lvl"].to_numpy() >= thr
-            if keep.any():
-                cur = pd.concat(
-                    [cur, pdf.loc[keep, ["qs_id", "value", "lvl"]]],
-                    ignore_index=True,
-                )
-            if len(cur) > cap:
-                lv = cur["lvl"].to_numpy()
-                cnt = np.bincount(lv, minlength=QSKETCH_MAX_LVL + 1)
-                suffix = cnt[::-1].cumsum()[::-1]  # suffix[t] = #{lvl>=t}
-                over = np.nonzero(suffix > cap)[0]
-                cand = int(over.max()) + 1 if len(over) else 0
-                if cand > thr:
-                    thr = cand
-                    cur = cur[cur["lvl"].to_numpy() >= thr]
-        out = cur.copy()
-        out["lvl"] = out["lvl"].astype("int32")
-        out["thr"] = np.int32(thr)
-        yield out
+            parts = pdf.groupby("__shard") if keyed else [(0, pdf)]
+            for shard, part in parts:
+                thr, cur = states.get(int(shard), (0, empty))
+                keep = part["lvl"].to_numpy() >= thr
+                if keep.any():
+                    cur = pd.concat(
+                        [cur, part.loc[keep, cols]], ignore_index=True
+                    )
+                if len(cur) > cap:
+                    lv = cur["lvl"].to_numpy()
+                    cnt = np.bincount(lv, minlength=QSKETCH_MAX_LVL + 1)
+                    suffix = cnt[::-1].cumsum()[::-1]  # suffix[t] = #{lvl>=t}
+                    over = np.nonzero(suffix > cap)[0]
+                    cand = int(over.max()) + 1 if len(over) else 0
+                    if cand > thr:
+                        thr = cand
+                        cur = cur[cur["lvl"].to_numpy() >= thr]
+                states[int(shard)] = (thr, cur)
+        for shard in sorted(states):
+            thr, cur = states[shard]
+            out = cur.astype(dtypes)
+            if keyed:
+                out.insert(0, "__shard", np.int32(shard))
+            out["thr"] = np.int32(thr)
+            yield out
 
-    return items.mapInPandas(
-        fold, "qs_id string, value double, lvl int, thr int"
+    return items.mapInPandas(fold, schema)
+
+
+def _qbuild_onepass(items: DataFrame, capacity: int) -> DataFrame:
+    """One-scan batch build: per-partition partials (zero shuffle) +
+    :func:`_qmerge`. The partials are eagerly materialized with
+    ``localCheckpoint`` so the ONLY job that touches the source is the
+    single partial pass; the merge then runs over the bounded
+    (n_partitions x capacity) checkpointed rows. Bit-identical to the
+    declarative build by the tested canonical-state merge law — the
+    state is a pure function of the item SET, independent of how the
+    items were split."""
+    partial = _qfold_partials(items, capacity).localCheckpoint(eager=True)
+    return _qmerge([partial], [], capacity)
+
+
+def _qquantiles(
+    state: DataFrame, group_cols: list[str], qs: tuple[float, ...]
+) -> DataFrame:
+    """Per-group quantile estimates from sketch states: one row per group
+    — (group..., n_kept, thr[, est_total_w], p{label}_r ...). Survivors
+    get the Horvitz-Thompson weight est_w = max(w, 2^thr), or 1 in an
+    unweighted state (whose kept rows are a uniform hash sample); the
+    q-quantile estimate is the first value (order: value, qs_id — every
+    pick integer-deterministic, so any engine replays it) whose running
+    est_w total reaches q * total_est_w. est_w and its prefix sums are
+    exact BIGINTs; only the final q * W product is double (q literal,
+    W < 2^53 — the same IEEE value in any engine). With every weight 1
+    the rule is cum = rn >= q*m, i.e. the sample's order statistic at
+    rank ceil(q*m) — exactly the unweighted oracle's pick. Ranking
+    windows partition by the group columns over the |groups| x capacity
+    state; the global sketch ranks under the constant-scope barrier."""
+    from pyspark.sql.window import Window
+
+    from bigdata_capstone_spark.operators.relational import constant_scope
+
+    labels = [_quantile_label(q) for q in qs]
+    if len(set(labels)) != len(labels):
+        raise ValueError(f"quantile labels collide for qs={qs!r}: {labels}")
+    weighted = "w" in state.columns
+    # shiftleft's python wrapper takes only a literal shift; the SQL
+    # form accepts a column
+    ew = (
+        F.greatest(F.col("w"), F.expr("shiftleft(CAST(1 AS BIGINT), thr)"))
+        if weighted
+        else F.lit(1).cast("long")
     )
+    s = state.select(*group_cols, "qs_id", "value", "thr", ew.alias("__ew"))
+    scope = group_cols or ["__s"]
+    if not group_cols:
+        s = constant_scope(s)
+    w_run = (
+        Window.partitionBy(*scope)
+        .orderBy("value", "qs_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    w_tot = Window.partitionBy(*scope).rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    ranked = s.select(
+        *scope,
+        "value",
+        "thr",
+        F.sum("__ew").over(w_run).cast("long").alias("cum_w"),
+        F.sum("__ew").over(w_tot).cast("long").alias("tot_w"),
+        F.count(F.lit(1)).over(w_tot).alias("m"),
+    )
+    aggs = [
+        F.round(
+            F.min(
+                F.when(
+                    F.col("cum_w").cast("double")
+                    >= F.lit(q) * F.col("tot_w").cast("double"),
+                    F.col("value"),
+                )
+            ),
+            6,
+        ).alias(f"p{lbl}_r")
+        for q, lbl in zip(qs, labels)
+    ]
+    total = [F.max("tot_w").cast("long").alias("est_total_w")] if weighted else []
+    out = ranked.groupBy(*scope).agg(
+        F.max("m").cast("long").alias("n_kept"),
+        F.max("thr").cast("int").alias("thr"),
+        *total,
+        *aggs,
+    )
+    return out if group_cols else out.drop("__s")
+
+
+# --- unweighted family ------------------------------------------------------
+
+
+def qsketch_build(
+    df: DataFrame, key_col: Column, value_col: Column, capacity: int
+) -> DataFrame:
+    """Batch build: items -> canonical compaction, (qs_id, value, lvl,
+    thr). The source is scanned TWICE (threshold contingency, then the
+    keep filter), both scans column-pruned to (key, value) — the honest
+    cost of a canonical batch state; the streaming twin never rescans
+    (each micro-batch builds its own bounded partial and folds)."""
+    return qsketch_grouped_build(df, [], key_col, value_col, capacity)
+
+
+def qsketch_partials_onepass(
+    df: DataFrame, key_col: Column, value_col: Column, capacity: int
+) -> DataFrame:
+    """Per-partition (qs_id, value, lvl, thr) partial states in one
+    zero-shuffle pass (see :func:`_qfold_partials`)."""
+    return _qfold_partials(_qitems(df, [], key_col, value_col), capacity)
 
 
 def qsketch_partials_onepass_keyed(
@@ -665,173 +913,37 @@ def qsketch_partials_onepass_keyed(
     value_col: Column,
     capacity: int,
 ) -> DataFrame:
-    """Per-(partition, shard) sketch partials in ONE corpus pass — the
-    multi-shard sibling of :func:`qsketch_partials_onepass` (r10
-    optimization): a shard-merge entry that simulates S shards by
-    filtering the same table S times pays S full scans and S sequential
-    eager materializations; this kernel keeps one bounded fold state
-    PER SHARD inside the single Arrow pass, so the scan count drops to
-    one however many shards the demonstration carves. Emits
-    (__shard, qs_id, value, lvl, thr): the rows with ``__shard == s``
-    form a valid canonical partial state of shard s's item subset
-    (each shard's fold never sees another shard's items, so the
-    floor-clamp exactness argument applies per shard unchanged), and
-    any downstream :func:`qsketch_merge` lands on the same bits as the
-    per-shard-scan build by the tested canonical-state merge law."""
-    items = df.select(
-        shard_col.cast("int").alias("__shard"),
-        key_col.cast("string").alias("qs_id"),
-        value_col.cast("double").alias("value"),
-    ).withColumn("lvl", qsketch_lvl_col(F.col("qs_id")))
-    cap = int(capacity)
-
-    def fold(batches):
-        import numpy as np
-        import pandas as pd
-
-        states: dict[int, tuple[int, pd.DataFrame]] = {}
-        empty = pd.DataFrame(
-            {
-                "qs_id": pd.Series(dtype=object),
-                "value": pd.Series(dtype="float64"),
-                "lvl": pd.Series(dtype="int32"),
-            }
-        )
-        for pdf in batches:
-            for shard, part in pdf.groupby("__shard"):
-                thr, cur = states.get(int(shard), (0, empty))
-                keep = part["lvl"].to_numpy() >= thr
-                if keep.any():
-                    cur = pd.concat(
-                        [cur, part.loc[keep, ["qs_id", "value", "lvl"]]],
-                        ignore_index=True,
-                    )
-                if len(cur) > cap:
-                    lv = cur["lvl"].to_numpy()
-                    cnt = np.bincount(lv, minlength=QSKETCH_MAX_LVL + 1)
-                    suffix = cnt[::-1].cumsum()[::-1]
-                    over = np.nonzero(suffix > cap)[0]
-                    cand = int(over.max()) + 1 if len(over) else 0
-                    if cand > thr:
-                        thr = cand
-                        cur = cur[cur["lvl"].to_numpy() >= thr]
-                states[int(shard)] = (thr, cur)
-        for shard in sorted(states):
-            thr, cur = states[shard]
-            out = cur.copy()
-            out.insert(0, "__shard", np.int32(shard))
-            out["lvl"] = out["lvl"].astype("int32")
-            out["thr"] = np.int32(thr)
-            yield out
-
-    return items.mapInPandas(
-        fold, "__shard int, qs_id string, value double, lvl int, thr int"
+    """Per-(partition, shard) (__shard, qs_id, value, lvl, thr) partial
+    states in one corpus pass — one bounded fold state per shard (see
+    :func:`_qfold_partials`)."""
+    shard = shard_col.cast("int").alias("__shard")
+    return _qfold_partials(
+        _qitems(df, [shard], key_col, value_col), capacity
     )
 
 
 def qsketch_build_onepass(
     df: DataFrame, key_col: Column, value_col: Column, capacity: int
 ) -> DataFrame:
-    """One-scan batch build: per-partition partials (zero shuffle) +
-    :func:`qsketch_merge`. The partials are eagerly materialized with
-    ``localCheckpoint`` so the ONLY job that touches the source is the
-    single partial pass; the merge then runs over the bounded
-    (n_partitions x capacity) checkpointed rows. Bit-identical to
-    :func:`qsketch_build` by the tested canonical-state merge law —
-    the state is a pure function of the item SET, independent of how
-    the items were split."""
-    partial = qsketch_partials_onepass(df, key_col, value_col, capacity)
-    partial = partial.localCheckpoint(eager=True)
-    return qsketch_merge([partial], capacity)
+    """One-scan twin of :func:`qsketch_build` (see
+    :func:`_qbuild_onepass`)."""
+    return _qbuild_onepass(_qitems(df, [], key_col, value_col), capacity)
 
 
 def qsketch_merge(states: list[DataFrame], capacity: int) -> DataFrame:
-    """Merge sketches built over DISJOINT item sets: union the state
-    rows, floor at the max carried threshold (a row another shard
-    already compacted away must not resurrect — dropping below-floor
-    rows first is what keeps the recompacted threshold identical to the
-    from-scratch build's), then recompact. O(sum of state sizes);
-    associative and commutative, so shard trees and streaming folds
-    land on the same bits."""
-    u = states[0]
-    for s in states[1:]:
-        u = u.unionByName(s)
-    # cache the union: bounded by len(states)*capacity rows BY DESIGN,
-    # and read twice here (floor aggregate + the floor filter) plus
-    # twice more inside the recompaction — without it every consumer
-    # re-executes each shard's full build lineage
-    u = u.cache()
-    floor = u.agg(F.max("thr").alias("__floor"))
-    items = (
-        u.crossJoin(F.broadcast(floor))
-        .filter(F.col("lvl") >= F.col("__floor"))
-        .select("qs_id", "value", "lvl")
-    )
-    # floor passed through: the recompacted threshold must never fall
-    # below the carried floor (see qsketch_compact)
-    merged = qsketch_compact(items, capacity, floor=floor)
-    # materialize the <=capacity-row result eagerly, then RELEASE the
-    # union cache: via start_state_fold_maintenance this merge runs once
-    # per micro-batch, and an un-unpersisted cache per epoch accumulates
-    # without bound over a stream's lifetime (ADVICE r8). localCheckpoint
-    # also truncates the fold's lineage to the bounded state.
-    merged = merged.localCheckpoint(eager=True)
-    u.unpersist()
-    return merged
+    """Merge global sketch states over DISJOINT item sets (see
+    :func:`_qmerge`)."""
+    return _qmerge(states, [], capacity)
 
 
 def qsketch_quantiles(
     state: DataFrame, qs: tuple[float, ...] = (0.5, 0.9, 0.99)
 ) -> DataFrame:
-    """Quantile estimates from a sketch state: the kept rows are a
-    uniform hash sample, so the q-quantile estimate is the sample's
-    order statistic at rank ceil(q*m) (ties broken by qs_id — every
-    pick integer-deterministic, so any engine replays it). Returns one
-    row: (n_kept, thr, p{label}_r ...). Ranking runs over the
-    <=capacity-row state under the constant-scope cache barrier."""
-    from pyspark.sql.window import Window
-
-    from bigdata_capstone_spark.operators.relational import constant_scope
-
-    labels = [_quantile_label(q) for q in qs]
-    if len(set(labels)) != len(labels):
-        raise ValueError(f"quantile labels collide for qs={qs!r}: {labels}")
-    s = constant_scope(state.select("qs_id", "value", "thr"))
-    w_rank = Window.partitionBy("__s").orderBy("value", "qs_id")
-    w_tot = Window.partitionBy("__s").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ranked = s.select(
-        "__s",
-        "value",
-        "thr",
-        F.row_number().over(w_rank).alias("rn"),
-        F.count(F.lit(1)).over(w_tot).alias("m"),
-    )
-    aggs = [
-        F.round(
-            F.min(
-                F.when(
-                    F.col("rn")
-                    >= F.greatest(
-                        F.lit(1), F.ceil(F.lit(q) * F.col("m"))
-                    ),
-                    F.col("value"),
-                )
-            ),
-            6,
-        ).alias(f"p{lbl}_r")
-        for q, lbl in zip(qs, labels)
-    ]
-    return (
-        ranked.groupBy("__s")
-        .agg(
-            F.max("m").cast("long").alias("n_kept"),
-            F.max("thr").cast("int").alias("thr"),
-            *aggs,
-        )
-        .drop("__s")
-    )
+    """Quantile estimates from a global sketch state: the kept rows are
+    a uniform hash sample, so the q-quantile estimate is the sample's
+    order statistic at rank ceil(q*m) (ties broken by qs_id). Returns
+    one row: (n_kept, thr, p{label}_r ...)."""
+    return _qquantiles(state, [], qs)
 
 
 def qsketch_grouped_build(
@@ -847,45 +959,11 @@ def qsketch_grouped_build(
     <=capacity-row state, all built from a single scan + one grouped
     contingency. The merge law holds per group (states over disjoint
     item sets union-and-recompact groupwise), so shard partials fold
-    exactly like the global sketch's.
-
-    Returns (group..., qs_id, value, lvl, thr). Unlike the global
-    build, every window here partitions by REAL group columns — no
-    constant-scope barrier needed; state is |groups| x capacity rows
-    however many values stream through."""
-    items = df.select(
-        *group_cols,
-        key_col.cast("string").alias("qs_id"),
-        value_col.cast("double").alias("value"),
-    ).withColumn("lvl", qsketch_lvl_col(F.col("qs_id")))
-    from pyspark.sql.window import Window
-
-    per = items.groupBy(*group_cols, "lvl").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(F.desc("lvl"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    thr = (
-        per.select(*group_cols, "lvl", F.sum("cnt").over(w).alias("cum"))
-        .groupBy(*group_cols)
-        .agg(
-            F.coalesce(
-                F.max(
-                    F.when(F.col("cum") > capacity, F.col("lvl") + 1)
-                ),
-                F.lit(0),
-            )
-            .cast("int")
-            .alias("thr")
-        )
-    )
-    return (
-        items.join(F.broadcast(thr), on=group_cols)
-        .filter(F.col("lvl") >= F.col("thr"))
-        .select(*group_cols, "qs_id", "value", "lvl", "thr")
+    exactly like the global sketch's. Returns (group..., qs_id, value,
+    lvl, thr); state is |groups| x capacity rows however many values
+    stream through."""
+    return _qcompact(
+        _qitems(df, group_cols, key_col, value_col), group_cols, capacity
     )
 
 
@@ -894,109 +972,19 @@ def qsketch_grouped_quantiles(
     group_cols: list[str],
     qs: tuple[float, ...] = (0.5, 0.9, 0.99),
 ) -> DataFrame:
-    """Per-group quantile estimates from grouped sketch states: one row
-    per group — (group..., n_kept, thr, p{label}_r ...), each pick the
-    group's sample order statistic at rank ceil(q*m) with the qs_id
-    tie-break. Ranking windows partition by the group columns over the
-    |groups| x capacity state."""
-    from pyspark.sql.window import Window
-
-    labels = [_quantile_label(q) for q in qs]
-    if len(set(labels)) != len(labels):
-        raise ValueError(f"quantile labels collide for qs={qs!r}: {labels}")
-    w_rank = Window.partitionBy(*group_cols).orderBy("value", "qs_id")
-    w_tot = Window.partitionBy(*group_cols).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ranked = state.select(
-        *group_cols,
-        "value",
-        "thr",
-        F.row_number().over(w_rank).alias("rn"),
-        F.count(F.lit(1)).over(w_tot).alias("m"),
-    )
-    aggs = [
-        F.round(
-            F.min(
-                F.when(
-                    F.col("rn")
-                    >= F.greatest(F.lit(1), F.ceil(F.lit(q) * F.col("m"))),
-                    F.col("value"),
-                )
-            ),
-            6,
-        ).alias(f"p{lbl}_r")
-        for q, lbl in zip(qs, labels)
-    ]
-    return ranked.groupBy(*group_cols).agg(
-        F.max("m").cast("long").alias("n_kept"),
-        F.max("thr").cast("int").alias("thr"),
-        *aggs,
-    )
+    """Per-group quantile estimates: one row per group — (group...,
+    n_kept, thr, p{label}_r ...), each pick the group's sample order
+    statistic at rank ceil(q*m) with the qs_id tie-break."""
+    return _qquantiles(state, group_cols, qs)
 
 
 def qsketch_grouped_merge(
     states: list[DataFrame], group_cols: list[str], capacity: int
 ) -> DataFrame:
     """Groupwise merge of per-group sketch states built over DISJOINT
-    item sets: union, floor each group at its max carried threshold,
-    recompact per group — the grouped twin of :func:`qsketch_merge`,
-    with the identical exactness argument applied within every group.
-    O(sum of state sizes); associative and commutative."""
-    from pyspark.sql.window import Window
-
-    u = states[0]
-    for s in states[1:]:
-        u = u.unionByName(s)
-    # bounded by len(states) * |groups| * capacity rows by design; read
-    # by the floor aggregate, the floor filter, and the recompaction
-    u = u.cache()
-    floor = u.groupBy(*group_cols).agg(F.max("thr").alias("__floor"))
-    items = (
-        u.join(F.broadcast(floor), on=group_cols)
-        .filter(F.col("lvl") >= F.col("__floor"))
-        .select(*group_cols, "qs_id", "value", "lvl")
-    )
-    per = items.groupBy(*group_cols, "lvl").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(F.desc("lvl"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cand = (
-        per.select(*group_cols, "lvl", F.sum("cnt").over(w).alias("cum"))
-        .groupBy(*group_cols)
-        .agg(
-            F.coalesce(
-                F.max(F.when(F.col("cum") > capacity, F.col("lvl") + 1)),
-                F.lit(0),
-            )
-            .cast("int")
-            .alias("__cand")
-        )
-    )
-    # clamp at the carried floor, groupwise (see qsketch_compact): a
-    # group whose floored survivors fit capacity must keep thr = floor,
-    # not reset to 0 — the 4-shard sequential fold drifts otherwise
-    thr = cand.join(F.broadcast(floor), on=group_cols).select(
-        *group_cols,
-        F.greatest(F.col("__cand"), F.col("__floor"))
-        .cast("int")
-        .alias("thr"),
-    )
-    merged = (
-        items.join(F.broadcast(thr), on=group_cols)
-        .filter(F.col("lvl") >= F.col("thr"))
-        .select(*group_cols, "qs_id", "value", "lvl", "thr")
-    )
-    # same cache-release discipline as qsketch_merge: materialize the
-    # bounded (|groups| x capacity) result, then free the union cache so
-    # per-epoch streaming folds do not leak one cached frame per batch
-    merged = merged.localCheckpoint(eager=True)
-    u.unpersist()
-    return merged
+    item sets, with the exactness argument of :func:`_qmerge` applied
+    within every group."""
+    return _qmerge(states, group_cols, capacity)
 
 
 def qsketch_cdf(
@@ -1037,108 +1025,16 @@ def qsketch_cdf(
     return out
 
 
-# ---------------------------------------------------------------------------
-# WEIGHTED level-sampling quantile sketch (r8 verdict Missing #5): the
-# qsketch family's weight rung. Corpus dashboards want TOKEN-weighted
-# value distributions (a 10-token doc and a 10k-token doc must not count
-# equally); the unweighted sketch samples items uniformly. Design: the
-# per-item PRF coin becomes a 60-bit uniform u, and the item survives
-# threshold t iff u < w * 2^(60-t) — inclusion probability
-# min(1, w/2^t), evaluated with pure integer shifts ((u >> (60-t)) < w,
-# no overflow, identical in any engine). A kept item carries the
-# Horvitz-Thompson weight est_w = max(w, 2^thr) — integer-exact. The
-# threshold rule, canonical-state property, merge group law, and floor
-# clamp are IDENTICAL to the unweighted family (the level is still a
-# pure per-item PRF), so shard-merge and streaming folds share one
-# oracle with the batch build.
-# ---------------------------------------------------------------------------
-
-
-def wqsketch_wlvl_col(key_col: Column, w_col: Column) -> Column:
-    """Weighted compaction level: the largest threshold the item's
-    60-bit PRF draw survives, wlvl = #{t in 1..40 : (u >> (60-t)) < w}
-    — survival is monotone decreasing in t, so the count IS the max
-    surviving level. Items with w <= 0 must be filtered by the caller
-    (they survive nothing)."""
-    u = md5_long(F.concat(F.lit("wqs:"), key_col.cast("string")))
-    w = w_col.cast("long")
-    lvl = F.lit(0)
-    for t in range(1, QSKETCH_MAX_LVL + 1):
-        lvl = lvl + F.when(F.shiftright(u, 60 - t) < w, 1).otherwise(0)
-    return lvl.cast("int")
-
-
-def wqsketch_wlvl_sql(w_expr: str = "w", hash_col: str = "__h") -> str:
-    """DuckDB twin of :func:`wqsketch_wlvl_col` over a precomputed
-    60-bit hash column (materialize ``md5('wqs:' || key)`` once)."""
-    terms = " + ".join(
-        f"CASE WHEN ({hash_col} >> {60 - t}) < {w_expr} THEN 1 ELSE 0 END"
-        for t in range(1, QSKETCH_MAX_LVL + 1)
-    )
-    return f"({terms})::INT"
+# --- weighted family --------------------------------------------------------
 
 
 def wqsketch_items(
     df: DataFrame, key_col: Column, value_col: Column, weight_col: Column
 ) -> DataFrame:
     """(qs_id, value, w, lvl) weighted item rows; non-positive weights
-    are dropped (a zero-weight item contributes nothing to any weighted
-    rank). ``key_col`` must be unique per row (per-item PRF coins)."""
-    return (
-        df.select(
-            key_col.cast("string").alias("qs_id"),
-            value_col.cast("double").alias("value"),
-            weight_col.cast("long").alias("w"),
-        )
-        .filter(F.col("w") > 0)
-        .withColumn("lvl", wqsketch_wlvl_col(F.col("qs_id"), F.col("w")))
-    )
-
-
-def wqsketch_compact(
-    items: DataFrame, capacity: int, floor: DataFrame | None = None
-) -> DataFrame:
-    """Canonical compaction, weighted state: identical integer-minimal
-    threshold rule and floor clamp as :func:`qsketch_compact` (the
-    level is a per-item PRF, so the same canonicality argument holds);
-    the kept rows carry their raw weight — the Horvitz-Thompson
-    estimator est_w = max(w, 2^thr) is applied at QUERY time so the
-    state stays merge-closed (a merge may raise thr, which re-scales
-    est_w for ALL survivors)."""
-    from pyspark.sql.window import Window
-
-    from bigdata_capstone_spark.operators.relational import constant_scope
-
-    per = constant_scope(
-        items.groupBy("lvl").agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = (
-        Window.partitionBy("__s")
-        .orderBy(F.desc("lvl"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = per.select("lvl", F.sum("cnt").over(w).alias("cum"))
-    cand = cum.agg(
-        F.coalesce(
-            F.max(F.when(F.col("cum") > capacity, F.col("lvl") + 1)),
-            F.lit(0),
-        )
-        .cast("int")
-        .alias("__cand")
-    )
-    if floor is not None:
-        thr = cand.crossJoin(F.broadcast(floor)).select(
-            F.greatest(F.col("__cand"), F.col("__floor"))
-            .cast("int")
-            .alias("thr")
-        )
-    else:
-        thr = cand.select(F.col("__cand").alias("thr"))
-    return (
-        items.crossJoin(F.broadcast(thr))
-        .filter(F.col("lvl") >= F.col("thr"))
-        .select("qs_id", "value", "w", "lvl", "thr")
-    )
+    are dropped. ``key_col`` must be unique per row (per-item PRF
+    coins)."""
+    return _qitems(df, [], key_col, value_col, weight_col)
 
 
 def wqsketch_build(
@@ -1148,157 +1044,27 @@ def wqsketch_build(
     weight_col: Column,
     capacity: int,
 ) -> DataFrame:
-    """Weighted batch build (declarative two-scan twin; the one-pass
-    kernel recipe of :func:`qsketch_build_onepass` applies verbatim
-    when the second scan matters)."""
-    return wqsketch_compact(
-        wqsketch_items(df, key_col, value_col, weight_col), capacity
+    """Weighted batch build, (qs_id, value, w, lvl, thr) — the
+    declarative two-scan twin of :func:`wqsketch_build_onepass`."""
+    return wqsketch_grouped_build(
+        df, [], key_col, value_col, weight_col, capacity
     )
 
 
 def wqsketch_merge(states: list[DataFrame], capacity: int) -> DataFrame:
-    """Merge weighted sketch states over DISJOINT item sets: union,
-    floor at the max carried threshold, recompact — the exact group
-    law of :func:`qsketch_merge`, weights riding along."""
-    u = states[0]
-    for s in states[1:]:
-        u = u.unionByName(s)
-    u = u.cache()
-    floor = u.agg(F.max("thr").alias("__floor"))
-    items = (
-        u.crossJoin(F.broadcast(floor))
-        .filter(F.col("lvl") >= F.col("__floor"))
-        .select("qs_id", "value", "w", "lvl")
-    )
-    merged = wqsketch_compact(items, capacity, floor=floor)
-    merged = merged.localCheckpoint(eager=True)
-    u.unpersist()
-    return merged
+    """Merge weighted sketch states over DISJOINT item sets — the exact
+    group law of :func:`_qmerge`, weights riding along."""
+    return _qmerge(states, [], capacity)
 
 
 def wqsketch_quantiles(
     state: DataFrame, qs: tuple[float, ...] = (0.5, 0.9, 0.99)
 ) -> DataFrame:
-    """WEIGHTED quantile estimates: survivors get the Horvitz-Thompson
-    weight est_w = max(w, 2^thr); the q-quantile estimate is the first
-    value (order: value, qs_id) whose running est_w total reaches
-    q * total_est_w. est_w and its prefix sums are exact BIGINTs; only
-    the final q * W product is double (q literal, W < 2^53 — the same
-    IEEE value in any engine). Returns one row:
+    """WEIGHTED quantile estimates from a global state: the first value
+    whose running Horvitz-Thompson weight reaches q * total (see
+    :func:`_qquantiles`). Returns one row:
     (n_kept, thr, est_total_w, p{label}_r ...)."""
-    from pyspark.sql.window import Window
-
-    from bigdata_capstone_spark.operators.relational import constant_scope
-
-    labels = [_quantile_label(q) for q in qs]
-    if len(set(labels)) != len(labels):
-        raise ValueError(f"quantile labels collide for qs={qs!r}: {labels}")
-    s = constant_scope(
-        state.select(
-            "qs_id",
-            "value",
-            "thr",
-            # shiftleft's python wrapper takes only a literal shift;
-            # the SQL form accepts a column
-            F.greatest(
-                F.col("w"), F.expr("shiftleft(CAST(1 AS BIGINT), thr)")
-            ).alias("__ew"),
-        )
-    )
-    w_run = (
-        Window.partitionBy("__s")
-        .orderBy("value", "qs_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_tot = Window.partitionBy("__s").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ranked = s.select(
-        "__s",
-        "value",
-        "thr",
-        F.sum("__ew").over(w_run).cast("long").alias("cum_w"),
-        F.sum("__ew").over(w_tot).cast("long").alias("tot_w"),
-        F.count(F.lit(1)).over(w_tot).alias("m"),
-    )
-    aggs = [
-        F.round(
-            F.min(
-                F.when(
-                    F.col("cum_w").cast("double")
-                    >= F.lit(q) * F.col("tot_w").cast("double"),
-                    F.col("value"),
-                )
-            ),
-            6,
-        ).alias(f"p{lbl}_r")
-        for q, lbl in zip(qs, labels)
-    ]
-    return (
-        ranked.groupBy("__s")
-        .agg(
-            F.max("m").cast("long").alias("n_kept"),
-            F.max("thr").cast("int").alias("thr"),
-            F.max("tot_w").cast("long").alias("est_total_w"),
-            *aggs,
-        )
-        .drop("__s")
-    )
-
-
-def wqsketch_partials_onepass(
-    df: DataFrame,
-    key_col: Column,
-    value_col: Column,
-    weight_col: Column,
-    capacity: int,
-) -> DataFrame:
-    """Weighted twin of :func:`qsketch_partials_onepass`: weighted
-    levels stay JVM-side; the Arrow kernel folds each partition into a
-    bounded local state with the weight column riding along. Same
-    incremental-fold exactness argument (the weighted level is a pure
-    per-item PRF)."""
-    items = wqsketch_items(df, key_col, value_col, weight_col)
-    cap = int(capacity)
-
-    def fold(batches):
-        import numpy as np
-        import pandas as pd
-
-        cur = pd.DataFrame(
-            {
-                "qs_id": pd.Series(dtype=object),
-                "value": pd.Series(dtype="float64"),
-                "w": pd.Series(dtype="int64"),
-                "lvl": pd.Series(dtype="int32"),
-            }
-        )
-        thr = 0
-        for pdf in batches:
-            keep = pdf["lvl"].to_numpy() >= thr
-            if keep.any():
-                cur = pd.concat(
-                    [cur, pdf.loc[keep, ["qs_id", "value", "w", "lvl"]]],
-                    ignore_index=True,
-                )
-            if len(cur) > cap:
-                lv = cur["lvl"].to_numpy()
-                cnt = np.bincount(lv, minlength=QSKETCH_MAX_LVL + 1)
-                suffix = cnt[::-1].cumsum()[::-1]
-                over = np.nonzero(suffix > cap)[0]
-                cand = int(over.max()) + 1 if len(over) else 0
-                if cand > thr:
-                    thr = cand
-                    cur = cur[cur["lvl"].to_numpy() >= thr]
-        out = cur.copy()
-        out["lvl"] = out["lvl"].astype("int32")
-        out["w"] = out["w"].astype("int64")
-        out["thr"] = np.int32(thr)
-        yield out
-
-    return items.mapInPandas(
-        fold, "qs_id string, value double, w bigint, lvl int, thr int"
-    )
+    return _qquantiles(state, [], qs)
 
 
 def wqsketch_partials_onepass_keyed(
@@ -1312,64 +1078,10 @@ def wqsketch_partials_onepass_keyed(
     """Weighted twin of :func:`qsketch_partials_onepass_keyed`: one
     corpus pass maintaining a bounded fold state PER SHARD (weights
     riding along), so an S-shard merge demonstration costs one scan
-    instead of S. Emits (__shard, qs_id, value, w, lvl, thr); per-shard
-    exactness and the downstream merge law carry over unchanged."""
-    items = (
-        df.select(
-            shard_col.cast("int").alias("__shard"),
-            key_col.cast("string").alias("qs_id"),
-            value_col.cast("double").alias("value"),
-            weight_col.cast("long").alias("w"),
-        )
-        .filter(F.col("w") > 0)
-        .withColumn("lvl", wqsketch_wlvl_col(F.col("qs_id"), F.col("w")))
-    )
-    cap = int(capacity)
-
-    def fold(batches):
-        import numpy as np
-        import pandas as pd
-
-        states: dict[int, tuple[int, pd.DataFrame]] = {}
-        empty = pd.DataFrame(
-            {
-                "qs_id": pd.Series(dtype=object),
-                "value": pd.Series(dtype="float64"),
-                "w": pd.Series(dtype="int64"),
-                "lvl": pd.Series(dtype="int32"),
-            }
-        )
-        for pdf in batches:
-            for shard, part in pdf.groupby("__shard"):
-                thr, cur = states.get(int(shard), (0, empty))
-                keep = part["lvl"].to_numpy() >= thr
-                if keep.any():
-                    cur = pd.concat(
-                        [cur, part.loc[keep, ["qs_id", "value", "w", "lvl"]]],
-                        ignore_index=True,
-                    )
-                if len(cur) > cap:
-                    lv = cur["lvl"].to_numpy()
-                    cnt = np.bincount(lv, minlength=QSKETCH_MAX_LVL + 1)
-                    suffix = cnt[::-1].cumsum()[::-1]
-                    over = np.nonzero(suffix > cap)[0]
-                    cand = int(over.max()) + 1 if len(over) else 0
-                    if cand > thr:
-                        thr = cand
-                        cur = cur[cur["lvl"].to_numpy() >= thr]
-                states[int(shard)] = (thr, cur)
-        for shard in sorted(states):
-            thr, cur = states[shard]
-            out = cur.copy()
-            out.insert(0, "__shard", np.int32(shard))
-            out["lvl"] = out["lvl"].astype("int32")
-            out["w"] = out["w"].astype("int64")
-            out["thr"] = np.int32(thr)
-            yield out
-
-    return items.mapInPandas(
-        fold,
-        "__shard int, qs_id string, value double, w bigint, lvl int, thr int",
+    instead of S. Emits (__shard, qs_id, value, w, lvl, thr)."""
+    shard = shard_col.cast("int").alias("__shard")
+    return _qfold_partials(
+        _qitems(df, [shard], key_col, value_col, weight_col), capacity
     )
 
 
@@ -1380,128 +1092,39 @@ def wqsketch_build_onepass(
     weight_col: Column,
     capacity: int,
 ) -> DataFrame:
-    """One-scan weighted batch build: per-partition partials (zero
-    shuffle) + :func:`wqsketch_merge` — bit-identical to
+    """One-scan weighted batch build — bit-identical to
     :func:`wqsketch_build` by the family's canonical-state law."""
-    partial = wqsketch_partials_onepass(
-        df, key_col, value_col, weight_col, capacity
+    return _qbuild_onepass(
+        _qitems(df, [], key_col, value_col, weight_col), capacity
     )
-    partial = partial.localCheckpoint(eager=True)
-    return wqsketch_merge([partial], capacity)
 
 
 def wqsketch_grouped_build(
     df: DataFrame,
-    group_cols: "list[str]",
+    group_cols: list[str],
     key_col: Column,
     value_col: Column,
     weight_col: Column,
     capacity: int,
 ) -> DataFrame:
-    """PER-GROUP weighted sketches in one pass — the grouped dimension
-    of the weighted family (per-language token-weighted length
-    dashboards): every group gets its own canonical <=capacity-row
-    weighted state from a single scan + one grouped contingency, the
-    same shape as :func:`qsketch_grouped_build` with the weighted level
-    and the weight column riding along. Returns
-    (group..., qs_id, value, w, lvl, thr)."""
-    from pyspark.sql.window import Window
-
-    items = (
-        df.select(
-            *group_cols,
-            key_col.cast("string").alias("qs_id"),
-            value_col.cast("double").alias("value"),
-            weight_col.cast("long").alias("w"),
-        )
-        .filter(F.col("w") > 0)
-        .withColumn("lvl", wqsketch_wlvl_col(F.col("qs_id"), F.col("w")))
-    )
-    per = items.groupBy(*group_cols, "lvl").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(F.desc("lvl"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    thr = (
-        per.select(*group_cols, "lvl", F.sum("cnt").over(w).alias("cum"))
-        .groupBy(*group_cols)
-        .agg(
-            F.coalesce(
-                F.max(
-                    F.when(F.col("cum") > capacity, F.col("lvl") + 1)
-                ),
-                F.lit(0),
-            )
-            .cast("int")
-            .alias("thr")
-        )
-    )
-    return (
-        items.join(F.broadcast(thr), on=group_cols)
-        .filter(F.col("lvl") >= F.col("thr"))
-        .select(*group_cols, "qs_id", "value", "w", "lvl", "thr")
+    """PER-GROUP weighted sketches in one pass (per-language
+    token-weighted length dashboards): the shape of
+    :func:`qsketch_grouped_build` with the weighted level and the weight
+    column riding along. Returns (group..., qs_id, value, w, lvl, thr)."""
+    return _qcompact(
+        _qitems(df, group_cols, key_col, value_col, weight_col),
+        group_cols,
+        capacity,
     )
 
 
 def wqsketch_grouped_quantiles(
     state: DataFrame,
-    group_cols: "list[str]",
+    group_cols: list[str],
     qs: tuple[float, ...] = (0.5, 0.9, 0.99),
 ) -> DataFrame:
     """Per-group WEIGHTED quantile estimates: one row per group —
     (group..., n_kept, thr, est_total_w, p{label}_r ...), each pick the
     first value whose running Horvitz-Thompson weight reaches
-    q * group_total. Windows partition by the group columns over the
-    |groups| x capacity state."""
-    from pyspark.sql.window import Window
-
-    labels = [_quantile_label(q) for q in qs]
-    if len(set(labels)) != len(labels):
-        raise ValueError(f"quantile labels collide for qs={qs!r}: {labels}")
-    s = state.select(
-        *group_cols,
-        "qs_id",
-        "value",
-        "thr",
-        F.greatest(
-            F.col("w"), F.expr("shiftleft(CAST(1 AS BIGINT), thr)")
-        ).alias("__ew"),
-    )
-    w_run = (
-        Window.partitionBy(*group_cols)
-        .orderBy("value", "qs_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_tot = Window.partitionBy(*group_cols).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ranked = s.select(
-        *group_cols,
-        "value",
-        "thr",
-        F.sum("__ew").over(w_run).cast("long").alias("cum_w"),
-        F.sum("__ew").over(w_tot).cast("long").alias("tot_w"),
-        F.count(F.lit(1)).over(w_tot).alias("m"),
-    )
-    aggs = [
-        F.round(
-            F.min(
-                F.when(
-                    F.col("cum_w").cast("double")
-                    >= F.lit(q) * F.col("tot_w").cast("double"),
-                    F.col("value"),
-                )
-            ),
-            6,
-        ).alias(f"p{lbl}_r")
-        for q, lbl in zip(qs, labels)
-    ]
-    return ranked.groupBy(*group_cols).agg(
-        F.max("m").cast("long").alias("n_kept"),
-        F.max("thr").cast("int").alias("thr"),
-        F.max("tot_w").cast("long").alias("est_total_w"),
-        *aggs,
-    )
+    q * group_total."""
+    return _qquantiles(state, group_cols, qs)

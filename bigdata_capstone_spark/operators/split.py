@@ -74,25 +74,6 @@ def split_ratings(
     }
 
 
-def split_invariants(
-    splits: dict[str, DataFrame],
-    user_col: str = "userId",
-    item_col: str = "movieId",
-) -> dict[str, int | float]:
-    """Cheap invariant report used by tests and the rows-only driver check:
-    sizes, row-level overlap between val/test (must be 0), and how many
-    val/test item ids leak back into train exclusively via fold-back."""
-    train, val, test = splits["train"], splits["val"], splits["test"]
-    tr = train.cache()
-    sizes = {
-        "train_rows": tr.count(),
-        "val_rows": val.count(),
-        "test_rows": test.count(),
-    }
-    overlap = val.intersect(test).count()
-    return {**sizes, "val_test_row_overlap": overlap}
-
-
 def split_ratings_prf(
     ratings: DataFrame,
     user_col: str = "userId",

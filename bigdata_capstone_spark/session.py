@@ -16,6 +16,48 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Default local driver heap: this share of the memory the host (or the
+# enclosing cgroup) grants, never more than DRIVER_MEM_CAP_MB. The heap
+# grows lazily, so a fixed 48g default looks harmless until a long run
+# pushes the JVM past physical RAM and the kernel kills it.
+DRIVER_MEM_FRACTION = 0.6
+DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def host_memory_bytes() -> int | None:
+    """Memory this process may use: the smaller of physical RAM
+    (``MemTotal``) and the cgroup limit (v2 ``memory.max`` or v1
+    ``memory.limit_in_bytes``). None when neither is readable."""
+    limits = []
+    try:
+        limits.append(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+    except (AttributeError, OSError, ValueError):
+        pass
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                v = f.read().strip()
+        except OSError:
+            continue
+        if v.isdigit():  # v2 writes "max" when unlimited
+            limits.append(int(v))
+    return min(limits) if limits else None
+
+
+def default_driver_memory(host_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` default: DRIVER_MEM_FRACTION of
+    ``host_bytes`` (default: :func:`host_memory_bytes`), capped at
+    DRIVER_MEM_CAP_MB; the cap itself when host memory is unknown."""
+    if host_bytes is None:
+        host_bytes = host_memory_bytes()
+    if host_bytes is None:
+        return f"{DRIVER_MEM_CAP_MB}m"
+    mb = int(host_bytes * DRIVER_MEM_FRACTION) >> 20
+    return f"{min(mb, DRIVER_MEM_CAP_MB)}m"
+
 
 def build_session(
     app_name: str = "bigdata_capstone_spark",
@@ -55,9 +97,13 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         # local mode: the driver JVM hosts all executor threads — size it
-        # for the thread count, not like a cluster driver (8g for 32
-        # threads thrashes GC under shuffle-heavy self-joins)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # from the host, not like a cluster driver (8g for 32 threads
+        # thrashes GC under shuffle-heavy self-joins, 48g on a 15 GB host
+        # is OOM-killed); SPARK_DRIVER_MEM overrides for a deployment
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         # ContextCleaner runs off GC; a big mostly-idle heap can defer GC
         # for many minutes, piling up dead shuffle/broadcast state that
         # slows later queries in long sessions. Default is 30min.

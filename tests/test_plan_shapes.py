@@ -187,38 +187,95 @@ def test_bucketed_join_no_exchange(spark):
     assert "SortMergeJoin" in plan, plan[:2000]
 
 
+def _unpartitioned_windows(df) -> list[str]:
+    """Sort keys of every window in ``df``'s optimized plan that has NO
+    partition spec. In `windowspecdefinition(part..., sort ASC/DESC,
+    frame)` the partition columns precede the sort specs — if the FIRST
+    argument is itself a sort spec (token immediately followed by
+    ASC/DESC), the partition list is empty."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.findall(r"windowspecdefinition\((\S+) (?:ASC|DESC) NULLS", plan)
+
+
+# Fixture columns with a handful of distinct values: a window partitioned
+# only by these funnels each stratum through one task's sort.
+LOW_CARD = {
+    "lang", "event_type", "source", "o_orderstatus",
+    "o_orderpriority", "l_returnflag", "l_linestatus", "r_name",
+    "n_name", "mime",
+}
+BOUNDING = (
+    "Aggregate",
+    "LocalRelation",  # collected literal frame (broadcast cutoff)
+    "LogicalRDD",     # createDataFrame'd literal frame, same role
+    "GlobalLimit",
+    "LocalLimit",
+    "__subrank",      # two-phase grouped top-k survivor filter
+    "__cutoff",       # broadcast hash-cutoff filter (stratified pick)
+)
+# Windows over persisted STATE SNAPSHOTS: the input parquet is
+# bounded by the sketch/state contract (<= |groups| x capacity
+# rows), which the gate cannot see from the plan. Each entry's
+# boundedness is itself tested (state-size invariants in
+# tests/test_sketches.py / test_streaming.py).
+BOUNDED_SNAPSHOT = {
+    "streaming_grouped_quantile_sketch",
+    "streaming_value_quantiles",
+}
+
+
+def _low_cardinality_funnels(df) -> list[list[str]]:
+    """Partition keys of every window in ``df``'s optimized plan that is
+    partitioned only by LOW_CARD columns and has no BOUNDING construct
+    below it."""
+    import re
+
+    def walk(node):
+        yield node
+        cs = node.children()
+        for i in range(cs.size()):
+            yield from walk(cs.apply(i))
+
+    bad = []
+    for node in walk(df._jdf.queryExecution().optimizedPlan()):
+        if node.nodeName() != "Window":
+            continue
+        ps = node.partitionSpec()
+        names = set()
+        for i in range(ps.size()):
+            s = ps.apply(i).toString()
+            m = re.match(r"(\w+)#\d+", s)
+            names.add(m.group(1) if m else s)
+        if not names or not names <= LOW_CARD:
+            continue
+        child = node.children().apply(0).toString()
+        if not any(tok in child for tok in BOUNDING):
+            bad.append(sorted(names))
+    return bad
+
+
 @pytest.mark.slow  # builds all 310 registry plans (~5 min)
-def test_no_unpartitioned_window_anywhere(spark):
+def test_no_unpartitioned_window_anywhere(spark, sf_small):
     """NO catalog query may plan a WindowExec without a partition spec —
     an unpartitioned window is a single-partition sort of its whole input
     (the `WARN WindowExec: No Partition Defined` anti-pattern), the one
     plan shape that cannot survive a 100× scale-up. Global running sums
     must go through relational.partitioned_prefix_sum; global ranks
     through TakeOrdered pre-selection + partitioned_row_number.
-
-    Detection: in `windowspecdefinition(part..., sort ASC/DESC, frame)`
-    the partition columns precede the sort specs — if the FIRST argument
-    is itself a sort spec (token immediately followed by ASC/DESC), the
-    partition list is empty.
+    Detection: :func:`_unpartitioned_windows`.
     """
-    import re
-
-    sf = "/root/testdata/sf0.001"
     bad = {}
     for name, fn in sorted(QUERIES.items()):
-        df = fn(spark, sf)
-        qe = df._jdf.queryExecution()
-        plan = qe.optimizedPlan().toString()
-        hits = re.findall(
-            r"windowspecdefinition\((\S+) (?:ASC|DESC) NULLS", plan
-        )
+        hits = _unpartitioned_windows(fn(spark, sf_small))
         if hits:
             bad[name] = hits
     assert not bad, f"unpartitioned windows in: {bad}"
 
 
 @pytest.mark.slow  # builds all 310 registry plans (~5 min)
-def test_no_low_cardinality_window_funnel(spark):
+def test_no_low_cardinality_window_funnel(spark, sf_small):
     """Generalization of the unpartitioned-window gate (r8 verdict
     Wrong #1): a window PARTITIONED by a handful-of-values column over
     a corpus-sized input is the same single-task pathology the
@@ -232,60 +289,44 @@ def test_no_low_cardinality_window_funnel(spark):
 
     Heuristic, stated honestly: the gate catches the raw-scan funnel
     class; it cannot prove the bounding filter is selective."""
-    import re
-
-    LOW_CARD = {
-        "lang", "event_type", "source", "o_orderstatus",
-        "o_orderpriority", "l_returnflag", "l_linestatus", "r_name",
-        "n_name", "mime",
-    }
-    BOUNDING = (
-        "Aggregate",
-        "LocalRelation",  # collected literal frame (broadcast cutoff)
-        "LogicalRDD",     # createDataFrame'd literal frame, same role
-        "GlobalLimit",
-        "LocalLimit",
-        "__subrank",      # two-phase grouped top-k survivor filter
-        "__cutoff",       # broadcast hash-cutoff filter (stratified pick)
-    )
-    # Windows over persisted STATE SNAPSHOTS: the input parquet is
-    # bounded by the sketch/state contract (<= |groups| x capacity
-    # rows), which the gate cannot see from the plan. Each entry's
-    # boundedness is itself tested (state-size invariants in
-    # tests/test_sketches.py / test_streaming.py).
-    BOUNDED_SNAPSHOT = {
-        "streaming_grouped_quantile_sketch",
-        "streaming_value_quantiles",
-    }
-    sf = "/root/testdata/sf0.001"
-
-    def walk(node):
-        yield node
-        cs = node.children()
-        for i in range(cs.size()):
-            yield from walk(cs.apply(i))
-
     bad = {}
     for name, fn in sorted(QUERIES.items()):
         if name in BOUNDED_SNAPSHOT:
             continue
-        df = fn(spark, sf)
-        plan = df._jdf.queryExecution().optimizedPlan()
-        for node in walk(plan):
-            if node.nodeName() != "Window":
-                continue
-            ps = node.partitionSpec()
-            names = set()
-            for i in range(ps.size()):
-                s = ps.apply(i).toString()
-                m = re.match(r"(\w+)#\d+", s)
-                names.add(m.group(1) if m else s)
-            if not names or not names <= LOW_CARD:
-                continue
-            child = node.children().apply(0).toString()
-            if not any(tok in child for tok in BOUNDING):
-                bad.setdefault(name, []).append(sorted(names))
+        hits = _low_cardinality_funnels(fn(spark, sf_small))
+        if hits:
+            bad[name] = hits
     assert not bad, f"low-cardinality window funnels in: {bad}"
+
+
+SKETCH_QUERIES = (
+    "event_value_quantile_sketch",
+    "event_value_quantile_sketch_onepass",
+    "quantile_sketch_shard_merge",
+    "streaming_quantile_sketch",
+    "event_type_value_quantile_sketch",
+    "streaming_grouped_quantile_sketch",
+    "event_value_cdf_sketch",
+    "docs_weighted_quantile_sketch",
+    "weighted_quantile_sketch_shard_merge",
+    "streaming_weighted_quantile_sketch",
+    "docs_weighted_quantile_sketch_onepass",
+    "orders_price_histogram",
+    "lang_weighted_quantile_sketch",
+)
+
+
+@pytest.mark.parametrize("name", SKETCH_QUERIES)
+def test_sketch_queries_pass_window_audits(spark, sf_small, name):
+    """Both window audits above, per query, in the default profile for
+    the level-sampling quantile-sketch family: its global sketch is the
+    grouped core with no group columns, which must keep planning its
+    windows under the constant-scope key rather than with an empty
+    partition spec."""
+    df = QUERIES[name](spark, sf_small)
+    assert _unpartitioned_windows(df) == []
+    if name not in BOUNDED_SNAPSHOT:
+        assert _low_cardinality_funnels(df) == []
 
 
 def test_stratified_sample_pick_is_cutoff_filtered(spark):

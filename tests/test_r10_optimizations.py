@@ -93,35 +93,6 @@ def test_mmr_fold_tie_breaks_on_smaller_id(spark):
     assert out[3]["vec_id"] == 30
 
 
-def test_keyed_onepass_partials_match_per_shard_builds(spark):
-    """The keyed one-pass kernel's per-shard states must merge to the
-    SAME bits as per-shard one-pass builds (and hence the one-shot
-    build) — the canonical-state law the shard-merge entries rely on."""
-    from bigdata_capstone_spark.operators.sketches import (
-        qsketch_build,
-        qsketch_merge,
-        qsketch_partials_onepass_keyed,
-        qsketch_quantiles,
-    )
-
-    df = spark.range(0, 5000).select(
-        F.col("id").alias("k"), (F.col("id") % 997).cast("double").alias("v")
-    )
-    partials = qsketch_partials_onepass_keyed(
-        df, F.col("k") % 3, F.col("k"), F.col("v"), 64
-    ).localCheckpoint(eager=True)
-    states = [
-        partials.filter(F.col("__shard") == i).drop("__shard")
-        for i in range(3)
-    ]
-    merged = qsketch_merge(states, 64)
-    oneshot = qsketch_build(df, F.col("k"), F.col("v"), 64)
-    got = qsketch_quantiles(merged).collect()
-    want = qsketch_quantiles(oneshot).collect()
-    assert len(got) == len(want) == 1
-    assert got[0].asDict() == want[0].asDict()
-
-
 def test_prf_anchor_literal_preserves_order_and_dtype(spark):
     """prf_medoids' collected anchor table must number cells in (hash,
     id) order and carry the input vector dtype unchanged."""

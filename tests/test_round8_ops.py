@@ -1,6 +1,6 @@
 """Round-8 operator tests: chunked-body reassembly at high chunk counts,
-KLL quantile sketch, JSONL ingestion, NN-descent, span byte-verify,
-MP4 container metadata."""
+JSONL ingestion, NN-descent, span byte-verify, MP4 container metadata.
+The round's quantile-sketch tests live in test_sketches.py."""
 
 from __future__ import annotations
 
@@ -43,142 +43,6 @@ def test_dechunk_many_chunks_value_and_linear_time():
     t1, t4 = t(512), t(2048)
     # linear: ratio ~4; quadratic: ratio ~16. Allow generous noise.
     assert t4 / max(t1, 1e-9) < 9.0, (t1, t4)
-
-
-# ---------------------------------------------------------------------------
-# Quantile sketch (level-sampling / PRF-coin KLL family)
-# ---------------------------------------------------------------------------
-
-
-def _collect_state(state):
-    return sorted(
-        (r["qs_id"], r["value"], r["lvl"], r["thr"]) for r in state.collect()
-    )
-
-
-def test_qsketch_split_independence_bitwise(spark, sf_small):
-    """merge(state(A), state(B)) == state(A ∪ B) BIT-FOR-BIT — the exact
-    group law PRF coins buy, including the adversarial split where one
-    shard's items all sit at high levels (the integer-minimal-threshold
-    case a present-level-minimum rule gets wrong)."""
-    from bigdata_capstone_spark.operators.sketches import (
-        qsketch_build,
-        qsketch_merge,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    ev = load_table(spark, sf_small, "events").cache()
-    cap = 64
-    full = qsketch_build(ev, F.col("event_id"), F.col("value"), cap)
-
-    # 2-way split on parity
-    parts = [
-        qsketch_build(
-            ev.filter(F.col("event_id") % 2 == i),
-            F.col("event_id"),
-            F.col("value"),
-            cap,
-        )
-        for i in range(2)
-    ]
-    assert _collect_state(qsketch_merge(parts, cap)) == _collect_state(full)
-
-    # adversarial split: one side gets ONLY the high-level survivors of
-    # the full build (its own thr lands high), the other the rest
-    kept_ids = {r["qs_id"] for r in full.collect()}
-    hi = ev.filter(
-        F.col("event_id").cast("string").isin(*sorted(kept_ids))
-    )
-    lo = ev.filter(
-        ~F.col("event_id").cast("string").isin(*sorted(kept_ids))
-    )
-    parts2 = [
-        qsketch_build(s, F.col("event_id"), F.col("value"), cap)
-        for s in (hi, lo)
-    ]
-    assert _collect_state(qsketch_merge(parts2, cap)) == _collect_state(full)
-
-
-def test_qsketch_merge_associativity_and_order(spark, sf_small):
-    from bigdata_capstone_spark.operators.sketches import (
-        qsketch_build,
-        qsketch_merge,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    ev = load_table(spark, sf_small, "events").cache()
-    cap = 64
-    shards = [
-        qsketch_build(
-            ev.filter(F.col("event_id") % 3 == i),
-            F.col("event_id"),
-            F.col("value"),
-            cap,
-        )
-        for i in range(3)
-    ]
-    flat = qsketch_merge(shards, cap)
-    nested = qsketch_merge(
-        [qsketch_merge([shards[2], shards[0]], cap), shards[1]], cap
-    )
-    assert _collect_state(flat) == _collect_state(nested)
-
-
-def test_qsketch_rank_error_within_dkw_bound(spark, sf_oracle):
-    """Estimated quantiles' TRUE ranks stay within the DKW sampling bound
-    ε = sqrt(ln(2/δ)/(2m)) at δ=0.02 of the target rank. The hash is a
-    fixed PRF, so this is deterministic — if it passes once it always
-    passes; it fails only if the estimator or the sampler regresses."""
-    import math
-
-    from bigdata_capstone_spark.operators.sketches import (
-        qsketch_build,
-        qsketch_quantiles,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    ev = load_table(spark, sf_oracle, "events").cache()
-    n = ev.count()
-    cap = 512
-    state = qsketch_build(ev, F.col("event_id"), F.col("value"), cap)
-    qs = (0.25, 0.5, 0.75, 0.9, 0.99)
-    row = qsketch_quantiles(state, qs).collect()[0]
-    m = row["n_kept"]
-    assert cap // 2 < m <= cap, m
-    eps = math.sqrt(math.log(2 / 0.02) / (2 * m))
-    vals = sorted(r["value"] for r in ev.select("value").collect())
-    for q, lbl in zip(qs, ("25", "50", "75", "90", "99")):
-        est = row[f"p{lbl}_r"]
-        true_rank = sum(1 for v in vals if v <= est) / n
-        assert abs(true_rank - q) <= eps, (q, est, true_rank, eps)
-
-
-def test_qsketch_empty_and_tiny_inputs(spark):
-    from bigdata_capstone_spark.operators.sketches import (
-        qsketch_build,
-        qsketch_quantiles,
-    )
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(10)], "id LONG, v DOUBLE"
-    )
-    state = qsketch_build(df, F.col("id"), F.col("v"), 64)
-    # under capacity: thr = 0, everything kept, quantiles EXACT
-    rows = state.collect()
-    assert len(rows) == 10 and all(r["thr"] == 0 for r in rows)
-    est = qsketch_quantiles(state, (0.5, 1.0)).collect()[0]
-    assert est["n_kept"] == 10
-    assert est["p50_r"] == 4.0  # ceil(0.5*10) = 5th of 0..9 = 4.0
-    assert est["p100_r"] == 9.0
-
-    empty = qsketch_build(
-        df.filter(F.col("id") < 0), F.col("id"), F.col("v"), 64
-    )
-    assert empty.count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -513,39 +377,6 @@ def test_jpeg_exif_walk_raises_on_corruption():
         _jpeg_header_metadata(bad)  # unknown TIFF byte order
 
 
-def test_qsketch_grouped_split_independence(spark, sf_small):
-    """The per-group merge law: qsketch_grouped_merge of shard states
-    equals the one-shot grouped build bit-for-bit."""
-    from bigdata_capstone_spark.operators.sketches import (
-        qsketch_grouped_build,
-        qsketch_grouped_merge,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    ev = load_table(spark, sf_small, "events").cache()
-    cap = 64
-    full = qsketch_grouped_build(
-        ev, ["event_type"], F.col("event_id"), F.col("value"), cap
-    )
-    shards = [
-        qsketch_grouped_build(
-            ev.filter(F.col("event_id") % 2 == i),
-            ["event_type"],
-            F.col("event_id"),
-            F.col("value"),
-            cap,
-        )
-        for i in range(2)
-    ]
-    merged = qsketch_grouped_merge(shards, ["event_type"], cap)
-
-    def key(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert key(merged) == key(full)
-
-
 # ---------------------------------------------------------------------------
 # Phrase search
 # ---------------------------------------------------------------------------
@@ -582,52 +413,6 @@ def test_phrase_search_overlaps_and_duplicate_terms(spark):
         ("a a", 2): (2, 1),     # "a a a": anchors 1, 2
         ("z", 4): (1, 3),       # single-token phrase
     }, got
-
-
-def test_qsketch_sequential_fold_thr_clamp(spark, sf_oracle):
-    """The streaming-shaped SEQUENTIAL fold (merge one shard at a time)
-    equals the one-shot build bit-for-bit — global and grouped. This is
-    the case that caught the floor-clamp bug: when the carried floor
-    already equals the from-scratch threshold, the floored survivors
-    fit capacity and an unclamped recompaction records thr = 0 (kept
-    rows matched; the thr column drifted)."""
-    from bigdata_capstone_spark.operators.sketches import (
-        qsketch_build,
-        qsketch_grouped_build,
-        qsketch_grouped_merge,
-        qsketch_merge,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    ev = load_table(spark, sf_oracle, "events").cache()
-
-    full = qsketch_build(ev, F.col("event_id"), F.col("value"), 512)
-    state = None
-    for i in range(4):
-        p = qsketch_build(
-            ev.filter(F.col("event_id") % 4 == i),
-            F.col("event_id"), F.col("value"), 512,
-        )
-        state = p if state is None else qsketch_merge([state, p], 512)
-    assert _collect_state(state) == _collect_state(full)
-
-    gfull = qsketch_grouped_build(
-        ev, ["event_type"], F.col("event_id"), F.col("value"), 256
-    )
-    gstate = None
-    for i in range(4):
-        p = qsketch_grouped_build(
-            ev.filter(F.col("event_id") % 4 == i),
-            ["event_type"], F.col("event_id"), F.col("value"), 256,
-        )
-        gstate = (
-            p if gstate is None
-            else qsketch_grouped_merge([gstate, p], ["event_type"], 256)
-        )
-    assert sorted(map(tuple, gstate.collect())) == sorted(
-        map(tuple, gfull.collect())
-    )
 
 
 # ---------------------------------------------------------------------------

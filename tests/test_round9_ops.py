@@ -157,72 +157,6 @@ def test_column_profile_all_null_column_and_ndv_budget(spark):
 
 
 # ---------------------------------------------------------------------------
-# One-pass qsketch batch build (r8 verdict Missing #2)
-# ---------------------------------------------------------------------------
-
-
-def test_qsketch_onepass_bit_identical_to_declarative(spark, sf_small):
-    from bigdata_capstone_spark.operators.sketches import (
-        qsketch_build,
-        qsketch_build_onepass,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_small, "events")
-    two = qsketch_build(ev, F.col("event_id"), F.col("value"), 64)
-    one = qsketch_build_onepass(ev, F.col("event_id"), F.col("value"), 64)
-    t = {tuple(r) for r in two.collect()}
-    o = {tuple(r) for r in one.collect()}
-    assert t == o and len(t) > 0
-
-
-def test_qsketch_onepass_partials_zero_shuffle_one_scan(spark, sf_small):
-    """The partial pass is the ONLY corpus-touching job: its physical
-    plan must contain exactly one file scan and ZERO Exchange nodes
-    (level assignment is map-side, the fold is per-partition)."""
-    import re
-
-    from bigdata_capstone_spark.operators.sketches import (
-        qsketch_partials_onepass,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_small, "events")
-    partial = qsketch_partials_onepass(
-        ev, F.col("event_id"), F.col("value"), 64
-    )
-    qe = partial._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
-    plan = qe.explainString(mode.fromString("formatted"))
-    scan_ids = set(re.findall(r"\((\d+)\) Scan parquet", plan))
-    assert len(scan_ids) == 1, plan[:2000]
-    exchanges = [
-        ln
-        for ln in plan.splitlines()
-        if re.match(r"\s*\(\d+\) (Broadcast)?Exchange", ln)
-    ]
-    assert exchanges == [], plan[:2000]
-
-
-def test_qsketch_onepass_partition_invariance(spark, sf_small):
-    """Partials depend on the partition split; the merged state must
-    not — re-partitioned input lands on identical bits."""
-    from bigdata_capstone_spark.operators.sketches import (
-        qsketch_build_onepass,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_small, "events")
-    a = qsketch_build_onepass(ev, F.col("event_id"), F.col("value"), 64)
-    b = qsketch_build_onepass(
-        ev.repartition(3), F.col("event_id"), F.col("value"), 64
-    )
-    assert {tuple(r) for r in a.collect()} == {
-        tuple(r) for r in b.collect()
-    }
-
-
-# ---------------------------------------------------------------------------
 # stratified_sample two-phase threshold pick (r8 verdict Wrong #1)
 # ---------------------------------------------------------------------------
 
@@ -470,82 +404,6 @@ def test_nn_insert_recall_not_worse_than_fresh_lsh_seed(spark, sf_small):
     assert r_final > 0.1, r_final
 
 
-# ---------------------------------------------------------------------------
-# Weighted quantile sketch (r8 verdict Missing #5)
-# ---------------------------------------------------------------------------
-
-
-def test_wqsketch_split_independence_bitwise(spark, sf_small):
-    """Merging weighted sketches of 3 disjoint splits must equal the
-    one-shot build bit-for-bit — the canonical-state group law with
-    weights riding along."""
-    from bigdata_capstone_spark.operators.sketches import (
-        wqsketch_build,
-        wqsketch_merge,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_small, "documents").select(
-        "doc_id", "n_chars", (F.col("doc_id") % 9 + 1).alias("w")
-    )
-    one = wqsketch_build(
-        docs, F.col("doc_id"), F.col("n_chars"), F.col("w"), 64
-    )
-    parts = [
-        wqsketch_build(
-            docs.filter(F.col("doc_id") % 3 == i),
-            F.col("doc_id"), F.col("n_chars"), F.col("w"), 64,
-        )
-        for i in range(3)
-    ]
-    merged = wqsketch_merge(parts, 64)
-    assert {tuple(r) for r in one.collect()} == {
-        tuple(r) for r in merged.collect()
-    }
-
-
-def test_wqsketch_weighted_rank_error_bounded(spark, sf_oracle):
-    """The estimated weighted quantiles must sit near the true weighted
-    order statistics: at each q, the EXACT weighted CDF of the
-    estimated value must be within a loose Horvitz-Thompson sampling
-    bound of q (the unweighted family's DKW discipline, widened for
-    weight variance)."""
-    import math
-
-    from bigdata_capstone_spark.operators.sketches import (
-        wqsketch_build,
-        wqsketch_quantiles,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_oracle, "documents").select(
-        "doc_id", "n_chars", (F.col("doc_id") % 17 + 1).alias("w")
-    )
-    state = wqsketch_build(
-        docs, F.col("doc_id"), F.col("n_chars"), F.col("w"), 256
-    )
-    row = wqsketch_quantiles(state, (0.5, 0.9)).collect()[0]
-    m = row["n_kept"]
-    eps = 3.0 * math.sqrt(math.log(2 / 0.01) / (2 * m))
-    exact = docs.select("n_chars", "w").collect()
-    tot = sum(r["w"] for r in exact)
-    for q, col in ((0.5, "p50_r"), (0.9, "p90_r")):
-        v = row[col]
-        cdf = sum(r["w"] for r in exact if r["n_chars"] <= v) / tot
-        assert abs(cdf - q) <= eps, (q, v, cdf, eps, m)
-
-
-def test_wqsketch_zero_weight_items_excluded(spark):
-    from bigdata_capstone_spark.operators.sketches import wqsketch_items
-
-    df = spark.createDataFrame(
-        [(1, 10.0, 5), (2, 20.0, 0), (3, 30.0, -2)],
-        "k INT, v DOUBLE, w INT",
-    )
-    items = wqsketch_items(df, F.col("k"), F.col("v"), F.col("w"))
-    assert [r["qs_id"] for r in items.collect()] == ["1"]
-
-
 def test_grouped_prefix_sum_matches_single_window(spark, sf_small):
     """grouped_prefix_sum must be bit-identical to the naive per-group
     window it replaces, for both inclusive and exclusive variants."""
@@ -661,27 +519,6 @@ def test_script_profile_counts_and_dominant(spark):
     assert rows[1]["dominant_script"] == "cyrillic"
     assert rows[2]["dominant_script"] == "none"
     assert rows[3]["dominant_script"] == "cyrillic"
-
-
-def test_wqsketch_onepass_bit_identical(spark, sf_small):
-    from bigdata_capstone_spark.operators.sketches import (
-        wqsketch_build,
-        wqsketch_build_onepass,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_small, "documents").select(
-        "doc_id", "n_chars", (F.col("doc_id") % 9 + 1).alias("w")
-    )
-    a = wqsketch_build(
-        docs, F.col("doc_id"), F.col("n_chars"), F.col("w"), 64
-    )
-    b = wqsketch_build_onepass(
-        docs, F.col("doc_id"), F.col("n_chars"), F.col("w"), 64
-    )
-    sa = {tuple(r) for r in a.collect()}
-    sb = {tuple(r) for r in b.collect()}
-    assert sa == sb and len(sa) > 0
 
 
 def test_stratified_panel_fold_matches_batch_sample(spark, sf_small):
@@ -814,41 +651,3 @@ def test_incremental_clusters_matches_rebuild_and_touch_contract(
     for r in assignment.collect():
         if got_map[r["doc_id"]] not in touched:
             assert got_map[r["doc_id"]] == r["cluster_id"]
-
-
-def test_wqsketch_grouped_split_independence(spark, sf_small):
-    """Grouped weighted states over disjoint splits must union+recompact
-    to the one-shot grouped build groupwise — here asserted the simple
-    way: the one-shot grouped state equals itself under repartitioned
-    input, and per-group states equal the global build filtered to the
-    group (the grouped construction introduces no cross-group
-    coupling)."""
-    from bigdata_capstone_spark.operators.sketches import (
-        wqsketch_build,
-        wqsketch_grouped_build,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_small, "documents").select(
-        "lang", "doc_id", "n_chars", (F.col("doc_id") % 9 + 1).alias("w")
-    )
-    grouped = wqsketch_grouped_build(
-        docs, ["lang"], F.col("doc_id"), F.col("n_chars"), F.col("w"), 32
-    )
-    reparted = wqsketch_grouped_build(
-        docs.repartition(5), ["lang"], F.col("doc_id"),
-        F.col("n_chars"), F.col("w"), 32,
-    )
-    assert {tuple(r) for r in grouped.collect()} == {
-        tuple(r) for r in reparted.collect()
-    }
-    langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
-    g = {tuple(r) for r in grouped.collect()}
-    for lang in langs:
-        solo = wqsketch_build(
-            docs.filter(F.col("lang") == lang),
-            F.col("doc_id"), F.col("n_chars"), F.col("w"), 32,
-        )
-        want = {(lang, *t) for t in (tuple(r) for r in solo.collect())}
-        got = {t for t in g if t[0] == lang}
-        assert got == want, lang

@@ -3,7 +3,9 @@
 The catalog oracle proves Spark and DuckDB compute the SAME sketch; these
 tests prove the sketch is a CORRECT sketch: CMS never underestimates,
 both estimators land near the exact answer on known data, and the HLL
-register grain is what makes it mergeable.
+register grain is what makes it mergeable. The level-sampling quantile
+sketch (``qsketch_*`` / ``wqsketch_*``) is pinned by its merge group law,
+one-pass/declarative bit-identity and rank-error bounds.
 """
 
 from __future__ import annotations
@@ -178,3 +180,439 @@ def test_quantiles_from_bins_guards(spark):
     with pytest.raises(ValueError, match="collide"):
         # identical labels after formatting must be rejected loudly
         sk.quantiles_from_bins(bins, ["grp"], 2.0, qs=(0.5, 0.5))
+
+
+# ---------------------------------------------------------------------------
+# Level-sampling quantile sketch (qsketch_* / wqsketch_*): merge law,
+# one-pass kernel, rank-error bounds, weighted rung
+# ---------------------------------------------------------------------------
+
+
+def _collect_state(state):
+    return sorted(
+        (r["qs_id"], r["value"], r["lvl"], r["thr"]) for r in state.collect()
+    )
+
+
+def test_qsketch_split_independence_bitwise(spark, sf_small):
+    """merge(state(A), state(B)) == state(A ∪ B) BIT-FOR-BIT — the exact
+    group law PRF coins buy, including the adversarial split where one
+    shard's items all sit at high levels (the integer-minimal-threshold
+    case a present-level-minimum rule gets wrong)."""
+    from bigdata_capstone_spark.operators.sketches import (
+        qsketch_build,
+        qsketch_merge,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+    from pyspark.sql import functions as F
+
+    ev = load_table(spark, sf_small, "events").cache()
+    cap = 64
+    full = qsketch_build(ev, F.col("event_id"), F.col("value"), cap)
+
+    # 2-way split on parity
+    parts = [
+        qsketch_build(
+            ev.filter(F.col("event_id") % 2 == i),
+            F.col("event_id"),
+            F.col("value"),
+            cap,
+        )
+        for i in range(2)
+    ]
+    assert _collect_state(qsketch_merge(parts, cap)) == _collect_state(full)
+
+    # adversarial split: one side gets ONLY the high-level survivors of
+    # the full build (its own thr lands high), the other the rest
+    kept_ids = {r["qs_id"] for r in full.collect()}
+    hi = ev.filter(
+        F.col("event_id").cast("string").isin(*sorted(kept_ids))
+    )
+    lo = ev.filter(
+        ~F.col("event_id").cast("string").isin(*sorted(kept_ids))
+    )
+    parts2 = [
+        qsketch_build(s, F.col("event_id"), F.col("value"), cap)
+        for s in (hi, lo)
+    ]
+    assert _collect_state(qsketch_merge(parts2, cap)) == _collect_state(full)
+
+
+def test_qsketch_merge_associativity_and_order(spark, sf_small):
+    from bigdata_capstone_spark.operators.sketches import (
+        qsketch_build,
+        qsketch_merge,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+    from pyspark.sql import functions as F
+
+    ev = load_table(spark, sf_small, "events").cache()
+    cap = 64
+    shards = [
+        qsketch_build(
+            ev.filter(F.col("event_id") % 3 == i),
+            F.col("event_id"),
+            F.col("value"),
+            cap,
+        )
+        for i in range(3)
+    ]
+    flat = qsketch_merge(shards, cap)
+    nested = qsketch_merge(
+        [qsketch_merge([shards[2], shards[0]], cap), shards[1]], cap
+    )
+    assert _collect_state(flat) == _collect_state(nested)
+
+
+def test_qsketch_rank_error_within_dkw_bound(spark, sf_oracle):
+    """Estimated quantiles' TRUE ranks stay within the DKW sampling bound
+    ε = sqrt(ln(2/δ)/(2m)) at δ=0.02 of the target rank. The hash is a
+    fixed PRF, so this is deterministic — if it passes once it always
+    passes; it fails only if the estimator or the sampler regresses."""
+    import math
+
+    from bigdata_capstone_spark.operators.sketches import (
+        qsketch_build,
+        qsketch_quantiles,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+    from pyspark.sql import functions as F
+
+    ev = load_table(spark, sf_oracle, "events").cache()
+    n = ev.count()
+    cap = 512
+    state = qsketch_build(ev, F.col("event_id"), F.col("value"), cap)
+    qs = (0.25, 0.5, 0.75, 0.9, 0.99)
+    row = qsketch_quantiles(state, qs).collect()[0]
+    m = row["n_kept"]
+    assert cap // 2 < m <= cap, m
+    eps = math.sqrt(math.log(2 / 0.02) / (2 * m))
+    vals = sorted(r["value"] for r in ev.select("value").collect())
+    for q, lbl in zip(qs, ("25", "50", "75", "90", "99")):
+        est = row[f"p{lbl}_r"]
+        true_rank = sum(1 for v in vals if v <= est) / n
+        assert abs(true_rank - q) <= eps, (q, est, true_rank, eps)
+
+
+def test_qsketch_empty_and_tiny_inputs(spark):
+    from bigdata_capstone_spark.operators.sketches import (
+        qsketch_build,
+        qsketch_quantiles,
+    )
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(i, float(i)) for i in range(10)], "id LONG, v DOUBLE"
+    )
+    state = qsketch_build(df, F.col("id"), F.col("v"), 64)
+    # under capacity: thr = 0, everything kept, quantiles EXACT
+    rows = state.collect()
+    assert len(rows) == 10 and all(r["thr"] == 0 for r in rows)
+    est = qsketch_quantiles(state, (0.5, 1.0)).collect()[0]
+    assert est["n_kept"] == 10
+    assert est["p50_r"] == 4.0  # ceil(0.5*10) = 5th of 0..9 = 4.0
+    assert est["p100_r"] == 9.0
+
+    empty = qsketch_build(
+        df.filter(F.col("id") < 0), F.col("id"), F.col("v"), 64
+    )
+    assert empty.count() == 0
+
+
+def test_qsketch_grouped_split_independence(spark, sf_small):
+    """The per-group merge law: qsketch_grouped_merge of shard states
+    equals the one-shot grouped build bit-for-bit."""
+    from bigdata_capstone_spark.operators.sketches import (
+        qsketch_grouped_build,
+        qsketch_grouped_merge,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+    from pyspark.sql import functions as F
+
+    ev = load_table(spark, sf_small, "events").cache()
+    cap = 64
+    full = qsketch_grouped_build(
+        ev, ["event_type"], F.col("event_id"), F.col("value"), cap
+    )
+    shards = [
+        qsketch_grouped_build(
+            ev.filter(F.col("event_id") % 2 == i),
+            ["event_type"],
+            F.col("event_id"),
+            F.col("value"),
+            cap,
+        )
+        for i in range(2)
+    ]
+    merged = qsketch_grouped_merge(shards, ["event_type"], cap)
+
+    def key(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert key(merged) == key(full)
+
+
+def test_qsketch_sequential_fold_thr_clamp(spark, sf_oracle):
+    """The streaming-shaped SEQUENTIAL fold (merge one shard at a time)
+    equals the one-shot build bit-for-bit — global and grouped. This is
+    the case that caught the floor-clamp bug: when the carried floor
+    already equals the from-scratch threshold, the floored survivors
+    fit capacity and an unclamped recompaction records thr = 0 (kept
+    rows matched; the thr column drifted)."""
+    from bigdata_capstone_spark.operators.sketches import (
+        qsketch_build,
+        qsketch_grouped_build,
+        qsketch_grouped_merge,
+        qsketch_merge,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+    from pyspark.sql import functions as F
+
+    ev = load_table(spark, sf_oracle, "events").cache()
+
+    full = qsketch_build(ev, F.col("event_id"), F.col("value"), 512)
+    state = None
+    for i in range(4):
+        p = qsketch_build(
+            ev.filter(F.col("event_id") % 4 == i),
+            F.col("event_id"), F.col("value"), 512,
+        )
+        state = p if state is None else qsketch_merge([state, p], 512)
+    assert _collect_state(state) == _collect_state(full)
+
+    gfull = qsketch_grouped_build(
+        ev, ["event_type"], F.col("event_id"), F.col("value"), 256
+    )
+    gstate = None
+    for i in range(4):
+        p = qsketch_grouped_build(
+            ev.filter(F.col("event_id") % 4 == i),
+            ["event_type"], F.col("event_id"), F.col("value"), 256,
+        )
+        gstate = (
+            p if gstate is None
+            else qsketch_grouped_merge([gstate, p], ["event_type"], 256)
+        )
+    assert sorted(map(tuple, gstate.collect())) == sorted(
+        map(tuple, gfull.collect())
+    )
+
+
+def test_qsketch_onepass_bit_identical_to_declarative(spark, sf_small):
+    from bigdata_capstone_spark.operators.sketches import (
+        qsketch_build,
+        qsketch_build_onepass,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+
+    ev = load_table(spark, sf_small, "events")
+    two = qsketch_build(ev, F.col("event_id"), F.col("value"), 64)
+    one = qsketch_build_onepass(ev, F.col("event_id"), F.col("value"), 64)
+    t = {tuple(r) for r in two.collect()}
+    o = {tuple(r) for r in one.collect()}
+    assert t == o and len(t) > 0
+
+
+def test_qsketch_onepass_partials_zero_shuffle_one_scan(spark, sf_small):
+    """The partial pass is the ONLY corpus-touching job: its physical
+    plan must contain exactly one file scan and ZERO Exchange nodes
+    (level assignment is map-side, the fold is per-partition)."""
+    import re
+
+    from bigdata_capstone_spark.operators.sketches import (
+        qsketch_partials_onepass,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+
+    ev = load_table(spark, sf_small, "events")
+    partial = qsketch_partials_onepass(
+        ev, F.col("event_id"), F.col("value"), 64
+    )
+    qe = partial._jdf.queryExecution()
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+    plan = qe.explainString(mode.fromString("formatted"))
+    scan_ids = set(re.findall(r"\((\d+)\) Scan parquet", plan))
+    assert len(scan_ids) == 1, plan[:2000]
+    exchanges = [
+        ln
+        for ln in plan.splitlines()
+        if re.match(r"\s*\(\d+\) (Broadcast)?Exchange", ln)
+    ]
+    assert exchanges == [], plan[:2000]
+
+
+def test_qsketch_onepass_partition_invariance(spark, sf_small):
+    """Partials depend on the partition split; the merged state must
+    not — re-partitioned input lands on identical bits."""
+    from bigdata_capstone_spark.operators.sketches import (
+        qsketch_build_onepass,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+
+    ev = load_table(spark, sf_small, "events")
+    a = qsketch_build_onepass(ev, F.col("event_id"), F.col("value"), 64)
+    b = qsketch_build_onepass(
+        ev.repartition(3), F.col("event_id"), F.col("value"), 64
+    )
+    assert {tuple(r) for r in a.collect()} == {
+        tuple(r) for r in b.collect()
+    }
+
+
+def test_wqsketch_split_independence_bitwise(spark, sf_small):
+    """Merging weighted sketches of 3 disjoint splits must equal the
+    one-shot build bit-for-bit — the canonical-state group law with
+    weights riding along."""
+    from bigdata_capstone_spark.operators.sketches import (
+        wqsketch_build,
+        wqsketch_merge,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_small, "documents").select(
+        "doc_id", "n_chars", (F.col("doc_id") % 9 + 1).alias("w")
+    )
+    one = wqsketch_build(
+        docs, F.col("doc_id"), F.col("n_chars"), F.col("w"), 64
+    )
+    parts = [
+        wqsketch_build(
+            docs.filter(F.col("doc_id") % 3 == i),
+            F.col("doc_id"), F.col("n_chars"), F.col("w"), 64,
+        )
+        for i in range(3)
+    ]
+    merged = wqsketch_merge(parts, 64)
+    assert {tuple(r) for r in one.collect()} == {
+        tuple(r) for r in merged.collect()
+    }
+
+
+def test_wqsketch_weighted_rank_error_bounded(spark, sf_oracle):
+    """The estimated weighted quantiles must sit near the true weighted
+    order statistics: at each q, the EXACT weighted CDF of the
+    estimated value must be within a loose Horvitz-Thompson sampling
+    bound of q (the unweighted family's DKW discipline, widened for
+    weight variance)."""
+    import math
+
+    from bigdata_capstone_spark.operators.sketches import (
+        wqsketch_build,
+        wqsketch_quantiles,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_oracle, "documents").select(
+        "doc_id", "n_chars", (F.col("doc_id") % 17 + 1).alias("w")
+    )
+    state = wqsketch_build(
+        docs, F.col("doc_id"), F.col("n_chars"), F.col("w"), 256
+    )
+    row = wqsketch_quantiles(state, (0.5, 0.9)).collect()[0]
+    m = row["n_kept"]
+    eps = 3.0 * math.sqrt(math.log(2 / 0.01) / (2 * m))
+    exact = docs.select("n_chars", "w").collect()
+    tot = sum(r["w"] for r in exact)
+    for q, col in ((0.5, "p50_r"), (0.9, "p90_r")):
+        v = row[col]
+        cdf = sum(r["w"] for r in exact if r["n_chars"] <= v) / tot
+        assert abs(cdf - q) <= eps, (q, v, cdf, eps, m)
+
+
+def test_wqsketch_zero_weight_items_excluded(spark):
+    from bigdata_capstone_spark.operators.sketches import wqsketch_items
+
+    df = spark.createDataFrame(
+        [(1, 10.0, 5), (2, 20.0, 0), (3, 30.0, -2)],
+        "k INT, v DOUBLE, w INT",
+    )
+    items = wqsketch_items(df, F.col("k"), F.col("v"), F.col("w"))
+    assert [r["qs_id"] for r in items.collect()] == ["1"]
+
+
+def test_wqsketch_onepass_bit_identical(spark, sf_small):
+    from bigdata_capstone_spark.operators.sketches import (
+        wqsketch_build,
+        wqsketch_build_onepass,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_small, "documents").select(
+        "doc_id", "n_chars", (F.col("doc_id") % 9 + 1).alias("w")
+    )
+    a = wqsketch_build(
+        docs, F.col("doc_id"), F.col("n_chars"), F.col("w"), 64
+    )
+    b = wqsketch_build_onepass(
+        docs, F.col("doc_id"), F.col("n_chars"), F.col("w"), 64
+    )
+    sa = {tuple(r) for r in a.collect()}
+    sb = {tuple(r) for r in b.collect()}
+    assert sa == sb and len(sa) > 0
+
+
+def test_wqsketch_grouped_split_independence(spark, sf_small):
+    """Grouped weighted states over disjoint splits must union+recompact
+    to the one-shot grouped build groupwise — here asserted the simple
+    way: the one-shot grouped state equals itself under repartitioned
+    input, and per-group states equal the global build filtered to the
+    group (the grouped construction introduces no cross-group
+    coupling)."""
+    from bigdata_capstone_spark.operators.sketches import (
+        wqsketch_build,
+        wqsketch_grouped_build,
+    )
+    from bigdata_capstone_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_small, "documents").select(
+        "lang", "doc_id", "n_chars", (F.col("doc_id") % 9 + 1).alias("w")
+    )
+    grouped = wqsketch_grouped_build(
+        docs, ["lang"], F.col("doc_id"), F.col("n_chars"), F.col("w"), 32
+    )
+    reparted = wqsketch_grouped_build(
+        docs.repartition(5), ["lang"], F.col("doc_id"),
+        F.col("n_chars"), F.col("w"), 32,
+    )
+    assert {tuple(r) for r in grouped.collect()} == {
+        tuple(r) for r in reparted.collect()
+    }
+    langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
+    g = {tuple(r) for r in grouped.collect()}
+    for lang in langs:
+        solo = wqsketch_build(
+            docs.filter(F.col("lang") == lang),
+            F.col("doc_id"), F.col("n_chars"), F.col("w"), 32,
+        )
+        want = {(lang, *t) for t in (tuple(r) for r in solo.collect())}
+        got = {t for t in g if t[0] == lang}
+        assert got == want, lang
+
+
+def test_keyed_onepass_partials_match_per_shard_builds(spark):
+    """The keyed one-pass kernel's per-shard states must merge to the
+    SAME bits as per-shard one-pass builds (and hence the one-shot
+    build) — the canonical-state law the shard-merge entries rely on."""
+    from bigdata_capstone_spark.operators.sketches import (
+        qsketch_build,
+        qsketch_merge,
+        qsketch_partials_onepass_keyed,
+        qsketch_quantiles,
+    )
+
+    df = spark.range(0, 5000).select(
+        F.col("id").alias("k"), (F.col("id") % 997).cast("double").alias("v")
+    )
+    partials = qsketch_partials_onepass_keyed(
+        df, F.col("k") % 3, F.col("k"), F.col("v"), 64
+    ).localCheckpoint(eager=True)
+    states = [
+        partials.filter(F.col("__shard") == i).drop("__shard")
+        for i in range(3)
+    ]
+    merged = qsketch_merge(states, 64)
+    oneshot = qsketch_build(df, F.col("k"), F.col("v"), 64)
+    got = qsketch_quantiles(merged).collect()
+    want = qsketch_quantiles(oneshot).collect()
+    assert len(got) == len(want) == 1
+    assert got[0].asDict() == want[0].asDict()

@@ -10,8 +10,11 @@ For each query, times:
   run2    - second noop write of a FRESH build (steady state measurement,
             caches cleared in between, like bench.py's loop)
 
-Also reports how many Spark jobs each phase launched (statusTracker
-delta), which separates eager-build actions from lazy execution.
+Also reports how many Spark jobs each phase launched, which separates
+eager-build actions from lazy execution. Jobs are counted by the DAG
+scheduler's job-id high-water mark (``perfbench.tracing.next_job_id``):
+the length of ``statusTracker().getJobIdsForGroup(None)`` shrinks once
+Spark's retained-jobs cap is reached, which reported negative counts.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_capstone_spark.catalog import QUERIES  # noqa: E402
 from bigdata_capstone_spark.session import build_session  # noqa: E402
+from perfbench.tracing import next_job_id  # noqa: E402
 
 
 def main() -> int:
@@ -33,22 +37,17 @@ def main() -> int:
     spark = build_session(app_name="profile_query")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{sf_dir}/region.parquet").collect()
-    tracker = spark.sparkContext.statusTracker
-
-    def jobs() -> int:
-        return len(tracker().getJobIdsForGroup(None) or [])
-
     for name in names:
         for run in range(n_runs):
             spark.catalog.clearCache()
             spark._jvm.System.gc()
-            j0, t0 = jobs(), time.perf_counter()
+            j0, t0 = next_job_id(spark), time.perf_counter()
             df = QUERIES[name](spark, sf_dir)
-            t1, j1 = time.perf_counter(), jobs()
+            t1, j1 = time.perf_counter(), next_job_id(spark)
             _ = df._jdf.queryExecution().executedPlan().toString()
             t2 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
-            t3, j3 = time.perf_counter(), jobs()
+            t3, j3 = time.perf_counter(), next_job_id(spark)
             print(
                 f"{name} run{run+1}: build={t1-t0:.2f}s ({j1-j0} jobs) "
                 f"plan={t2-t1:.2f}s exec={t3-t2:.2f}s ({j3-j1} jobs) "
